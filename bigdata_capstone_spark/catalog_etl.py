@@ -5627,9 +5627,9 @@ def event_value_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the oracle replays the whole construction.
 
     Scale shape: level assignment is a map-side expression; the
-    threshold derives from a <=41-row contingency; ranking runs over the
-    <=capacity-row state under the constant-scope cache barrier. State
-    stays <=512 rows however many values stream through."""
+    threshold is one map-side-combined aggregate; the rank picks are
+    one aggregate over the <=capacity-row state. State stays <=512
+    rows however many values stream through."""
     from bigdata_capstone_spark.operators.sketches import (
         qsketch_build,
         qsketch_quantiles,
@@ -6039,12 +6039,12 @@ def event_type_value_quantile_sketch(
     production shape of the family (a value-distribution dashboard per
     event type / language / source), where the global entry is the
     single-dial case. The per-group states obey the same exact merge
-    law, so shard partials fold groupwise; every window partitions by
-    the REAL group column (no constant-scope barrier needed), and the
+    law, so shard partials fold groupwise; the thresholds and the rank
+    picks are aggregates grouped by the REAL group column, and the
     oracle replays levels, each group's integer-minimal threshold, and
     every per-group rank pick.
 
-    Scale shape: one scan + one |groups| x 41 contingency; thresholds
+    Scale shape: one scan + one grouped threshold aggregate; thresholds
     broadcast back; state is |groups| x capacity rows forever."""
     from bigdata_capstone_spark.operators.sketches import (
         qsketch_grouped_build,
@@ -6442,8 +6442,8 @@ def event_value_cdf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the estimate is one aggregate over the <=512-row
     state; the exact side is one column-pruned scan computing every
-    probe's count map-side — both unpivoted from cached 1-row frames,
-    no probe joins."""
+    probe's count map-side — both unpivoted from 1-row frames by an
+    explode, no probe joins, no cache."""
     from bigdata_capstone_spark.operators.sketches import (
         qsketch_build,
         qsketch_cdf,
@@ -6455,24 +6455,11 @@ def event_value_cdf_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev, F.col("event_id"), F.col("value"), _QSKETCH_CAPACITY
     )
     est = qsketch_cdf(state, list(_CDF_PROBES))
-    exact_row = ev.agg(
-        F.count(F.lit(1)).cast("long").alias("__n"),
-        *[
-            F.sum(F.when(F.col("value") <= F.lit(p), 1).otherwise(0))
-            .cast("long")
-            .alias(f"__le_{i}")
-            for i, p in enumerate(_CDF_PROBES)
-        ],
-    ).cache()
-    exact = None
-    for i, p in enumerate(_CDF_PROBES):
-        r = exact_row.select(
-            F.lit(float(p)).alias("probe_v"),
-            F.round(F.col(f"__le_{i}") / F.col("__n"), 6).alias(
-                "exact_cdf_r"
-            ),
-        )
-        exact = r if exact is None else exact.unionByName(r)
+    # the exact CDF is the same one-aggregate count over ALL the values
+    # (a "state" holding every item)
+    exact = qsketch_cdf(ev, list(_CDF_PROBES)).select(
+        "probe_v", F.col("est_cdf_r").alias("exact_cdf_r")
+    )
     return est.join(F.broadcast(exact), on="probe_v").select(
         "probe_v", "n_kept", "est_cdf_r", "exact_cdf_r"
     )
@@ -6733,8 +6720,8 @@ def docs_weighted_quantile_sketch(
     entire construction bit-for-bit.
 
     Scale shape: weighted level = map-side integer expression; the
-    threshold derives from a <=41-row contingency; ranking runs over
-    the <=capacity-row state under the constant-scope barrier."""
+    threshold is one map-side-combined aggregate; the weighted rank
+    picks are one aggregate over the <=capacity-row state."""
     from bigdata_capstone_spark.operators.sketches import (
         wqsketch_build,
         wqsketch_quantiles,
@@ -7509,14 +7496,14 @@ def lang_weighted_quantile_sketch(
     weighted sketches (operators/sketches.py wqsketch_grouped_*) — the
     production shape of the weighted family: one dashboard row per
     language, each group its own canonical <=256-row weighted state
-    from ONE scan + one grouped contingency, quantiles at the weighted
-    ranks. Completes the weighted family's dimensions: global batch /
-    one-pass / shard-merge / streaming / GROUPED, all on the same
-    PRF-coin construction the oracle replays.
+    from ONE scan + one grouped threshold aggregate, quantiles at the
+    weighted ranks. Completes the weighted family's dimensions: global
+    batch / one-pass / shard-merge / streaming / GROUPED, all on the
+    same PRF-coin construction the oracle replays.
 
     Scale shape: weighted level is map-side; the grouped threshold is
-    a <=41 x |langs| contingency; ranking windows partition by lang
-    over the bounded state."""
+    one aggregate grouped by lang; the weighted rank picks are one
+    grouped aggregate over the bounded state."""
     from bigdata_capstone_spark.operators.sketches import (
         wqsketch_grouped_build,
         wqsketch_grouped_quantiles,

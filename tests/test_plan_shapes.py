@@ -254,7 +254,6 @@ def test_no_low_cardinality_window_funnel(spark):
     # boundedness is itself tested (state-size invariants in
     # tests/test_sketches.py / test_streaming.py).
     BOUNDED_SNAPSHOT = {
-        "streaming_grouped_quantile_sketch",
         "streaming_value_quantiles",
     }
     sf = "/root/testdata/sf0.001"

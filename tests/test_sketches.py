@@ -178,3 +178,189 @@ def test_quantiles_from_bins_guards(spark):
     with pytest.raises(ValueError, match="collide"):
         # identical labels after formatting must be rejected loudly
         sk.quantiles_from_bins(bins, ["grp"], 2.0, qs=(0.5, 0.5))
+
+
+# ---------------------------------------------------------------------------
+# Level-sampling quantile sketch: closed-form levels and barrier-free plans
+# ---------------------------------------------------------------------------
+
+# 60-bit hash edge cases: 0 (capped level), every single set bit, all ones
+_EDGE_HASHES = [0] + [1 << j for j in range(60)] + [(1 << 60) - 1]
+
+
+def _duckdb_rows(pdf, sql):
+    import duckdb
+
+    con = duckdb.connect()
+    con.register("t", pdf)
+    return con.execute(sql).fetchall()
+
+
+def test_qsketch_level_closed_form_matches_duckdb_twin(spark):
+    """The closed-form level (bit_count of the trailing-zero mask)
+    equals the indicator-sum SQL the oracles replay, on every edge
+    hash and on real md5 hashes; a NULL hash/key gets level 0."""
+    import pandas as pd
+
+    from bigdata_capstone_spark.functions.portable import md5_long_sql
+
+    hashes = _EDGE_HASHES + [None]
+    df = spark.createDataFrame([(h,) for h in hashes], "h LONG")
+    got = {
+        r["h"]: r["lvl"]
+        for r in df.select("h", sk.qsketch_hash_lvl(F.col("h")).alias("lvl"))
+        .collect()
+    }
+    pdf = pd.DataFrame({"h": pd.array(hashes, dtype="Int64")})
+    want = dict(_duckdb_rows(pdf, f"SELECT h, {sk.qsketch_lvl_sql('h')} FROM t"))
+    assert got == want
+    assert got[0] == sk.QSKETCH_MAX_LVL and got[None] == 0
+    assert [got[1 << j] for j in range(60)] == [
+        min(j, sk.QSKETCH_MAX_LVL) for j in range(60)
+    ]
+
+    keys = spark.range(2000).select(F.col("id").cast("string").alias("k"))
+    got = {
+        r["k"]: r["lvl"]
+        for r in keys.select("k", sk.qsketch_lvl_col(F.col("k")).alias("lvl"))
+        .collect()
+    }
+    pdf = pd.DataFrame({"k": [str(i) for i in range(2000)]})
+    h = md5_long_sql("'qs:' || k")
+    want = dict(
+        _duckdb_rows(
+            pdf,
+            f"SELECT k, {sk.qsketch_lvl_sql()} FROM (SELECT k, {h} AS __h FROM t)",
+        )
+    )
+    assert got == want
+    [null_key] = spark.range(1).select(
+        sk.qsketch_lvl_col(F.lit(None).cast("string")).alias("lvl")
+    ).collect()
+    assert null_key["lvl"] == 0
+
+
+def test_wqsketch_level_closed_form_matches_duckdb_twin(spark):
+    """The closed-form weighted level (bit length of u div w) equals
+    the indicator-sum SQL over edge draws x weights 1, 2^k and weights
+    near 2^60, and non-positive or NULL inputs get level 0 as there."""
+    import itertools
+
+    import pandas as pd
+
+    weights = (
+        [1, 3, 12345]
+        + [1 << k for k in range(63)]
+        + [(1 << 60) - 1, (1 << 60) + 1, (1 << 63) - 1]
+        + [0, -5, None]
+    )
+    us = _EDGE_HASHES + [None]
+    rows = list(itertools.product(us, weights))
+    df = spark.createDataFrame(rows, "u LONG, w LONG")
+    got = {
+        (r["u"], r["w"]): r["lvl"]
+        for r in df.select(
+            "u", "w", sk.wqsketch_hash_wlvl(F.col("u"), F.col("w")).alias("lvl")
+        ).collect()
+    }
+    pdf = pd.DataFrame(
+        {
+            "u": pd.array([u for u, _ in rows], dtype="Int64"),
+            "w": pd.array([w for _, w in rows], dtype="Int64"),
+        }
+    )
+    want = {
+        (u, w): lvl
+        for u, w, lvl in _duckdb_rows(
+            pdf, f"SELECT u, w, {sk.wqsketch_wlvl_sql('w', 'u')} FROM t"
+        )
+    }
+    assert got == want
+    assert got[(0, 1)] == sk.QSKETCH_MAX_LVL and got[((1 << 60) - 1, 1)] == 0
+    assert got[(1, None)] == got[(None, 1)] == got[(1, 0)] == got[(1, -5)] == 0
+
+
+def _build_jobs(spark, build):
+    """(frame, Spark jobs run while building it) by job-id delta."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
+    df = build()
+    return df, int(dag.nextJobId()) - j0
+
+
+def test_quantile_sketch_entries_build_without_barriers(spark, sf_small):
+    """The sketch entries are lazy plans: building the one-pass
+    histogram runs no Spark job, the shard merge at most one (the
+    keyed partials' checkpoint), and neither optimized plan holds a
+    Window or a cached relation. The one-pass histogram still scans
+    its source exactly once when executed."""
+    from py4j.protocol import Py4JJavaError
+
+    from bigdata_capstone_spark.catalog import QUERIES
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    sc = spark.sparkContext._jsc.sc()
+    for name, max_jobs in (
+        ("orders_price_histogram", 0),
+        ("quantile_sketch_shard_merge", 1),
+    ):
+        df, jobs = _build_jobs(spark, lambda: QUERIES[name](spark, sf_small))
+        assert jobs <= max_jobs, (name, jobs)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Window" not in plan, (name, plan[:3000])
+        assert "InMemoryRelation" not in plan, (name, plan[:3000])
+
+    orders = load_table(spark, sf_small, "orders")
+    n_orders = orders.count()
+    n_partial = sk.qsketch_partials_onepass(
+        orders, F.col("o_orderkey"), F.col("o_totalprice"), 512
+    ).count()
+    df = QUERIES["orders_price_histogram"](spark, sf_small)
+    s0 = int(sc.dagScheduler().nextStageId())
+    assert len(df.collect()) == 1
+    s1 = int(sc.dagScheduler().nextStageId())
+    sc.listenerBus().waitUntilEmpty()
+    no_q = spark.sparkContext._gateway.new_array(
+        spark.sparkContext._gateway.jvm.double, 0
+    )
+    read = 0
+    for sid in range(s0, s1):
+        try:
+            attempts = sc.statusStore().stageData(sid, False, None, False, no_q)
+        except Py4JJavaError:  # id of a stage that never ran
+            continue
+        for i in range(attempts.size()):
+            st = attempts.apply(i)
+            if st.status().toString() != "SKIPPED":
+                read += int(st.inputRecords())
+    # input records = one parquet scan + one re-read of the partials
+    # from the blocks their first computation cached
+    assert read == n_orders + n_partial, (read, n_orders, n_partial)
+
+
+def test_qsketch_empty_merge_and_quantiles(spark):
+    """Empty states merge to an empty state, and an empty state has no
+    quantile row (the one-aggregate pick drops it)."""
+    empty = sk.qsketch_build(
+        spark.createDataFrame([], "id LONG, v DOUBLE"), F.col("id"), F.col("v"), 64
+    )
+    merged = sk.qsketch_merge([empty, empty], 64)
+    assert merged.count() == 0
+    assert merged.columns == ["qs_id", "value", "lvl", "thr"]
+    assert sk.qsketch_quantiles(empty).count() == 0
+    assert sk.qsketch_quantiles(merged).count() == 0
+
+
+def test_qsketch_cdf_leaves_no_cache(spark):
+    """qsketch_cdf is one aggregate plus an explode: one row per probe,
+    in probe order, and no cached relation left behind per call."""
+    df = spark.createDataFrame(
+        [(i, float(i)) for i in range(10)], "id LONG, v DOUBLE"
+    )
+    state = sk.qsketch_build(df, F.col("id"), F.col("v"), 64)
+    spark.catalog.clearCache()
+    rows = sk.qsketch_cdf(state, [4.0, -1.0, 100.0]).collect()
+    assert [tuple(r) for r in rows] == [
+        (4.0, 10, 0.5), (-1.0, 10, 0.0), (100.0, 10, 1.0)
+    ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -10,8 +10,12 @@ For each query, times:
   run2    - second noop write of a FRESH build (steady state measurement,
             caches cleared in between, like bench.py's loop)
 
-Also reports how many Spark jobs each phase launched (statusTracker
-delta), which separates eager-build actions from lazy execution.
+Also reports how many Spark jobs each phase launched, which separates
+eager-build actions from lazy execution. Jobs are counted by job-id
+delta (the DAG scheduler's next job id before and after): the status
+tracker keeps only ``spark.ui.retainedJobs`` entries, so a count taken
+from its job list stops growing, and goes negative as a difference,
+once a long session passes that many jobs.
 """
 
 from __future__ import annotations
@@ -33,10 +37,10 @@ def main() -> int:
     spark = build_session(app_name="profile_query")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     spark.read.parquet(f"{sf_dir}/region.parquet").collect()
-    tracker = spark.sparkContext.statusTracker
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
 
     def jobs() -> int:
-        return len(tracker().getJobIdsForGroup(None) or [])
+        return int(dag.nextJobId())
 
     for name in names:
         for run in range(n_runs):
