@@ -464,6 +464,104 @@ def global_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # over the driver tables, fully SQL-expressible for the oracle.
 # --------------------------------------------------------------------------
 
+def segment_popularity_eval(
+    spark: SparkSession, sf_dir: str, ks: list[int]
+) -> DataFrame:
+    """P/Recall/MAP/NDCG at every k in ``ks`` of the segment-popularity
+    recommender — the builder behind ``ranking_metrics_popularity`` and
+    ``ranking_metrics_sweep``. One row per k, ascending: (k, n_users,
+    four global means rounded to 6dp, because a mean over users is
+    reduction-order dependent).
+
+    Recommender: per market segment, the top-max(ks) parts by damped
+    revenue score (Q9 formula). Ground truth per customer: parts bought
+    with quantity strictly above the customer's own mean quantity (Q7
+    semantics, popularity_model.py:52-54). Metrics follow pinned mllib
+    semantics (operators/ranking_metrics.py).
+
+    Shape — every customer in a segment gets the same list, so no
+    customers x k prediction rows are built and nothing joins on
+    (customer, part):
+    - segment lists: a ``groupBy(seg, part)`` score aggregate, the
+      per-segment top-k (``grouped_top_k``; its WindowGroupLimit cuts
+      rows per task before the segment window), and a fold of the
+      <= k·|seg| winners into a broadcast ``seg -> {part: pos}`` map;
+    - customers: ONE ``groupBy(cust, seg)`` aggregate of the customer's
+      (part, qty) line pairs with the exact decimal quantity sum and the
+      line count, so the labels are the distinct parts of the lines with
+      qty > mean, taken in the same row — no mean join;
+    - hit positions: the labels looked up in the segment's map, sorted,
+      then the metric kernel per k.
+    The per-customer array holds one entry per lineitem of that customer
+    (its order lines, not the whole fact); the segment map holds k
+    entries."""
+    from bigdata_capstone_spark.operators.ranking_metrics import (
+        hit_metrics_at_ks,
+    )
+
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    customer = load_table(spark, sf_dir, "customer")
+    sales = (
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(
+            F.broadcast(customer.select("c_custkey", "c_mktsegment")),
+            orders.o_custkey == F.col("c_custkey"),
+        )
+        .select(
+            F.col("c_custkey").alias("cust"),
+            F.col("l_partkey").alias("part"),
+            F.col("c_mktsegment").alias("seg"),
+            F.col("l_extendedprice").alias("price"),
+            F.col("l_quantity").alias("qty"),
+        )
+    )
+    seg_scores = sales.groupBy("seg", "part").agg(
+        F.expr(
+            "CAST(sum(CAST(price AS DECIMAL(18,2))) AS DOUBLE)"
+            " / (count(1) + 100D) AS score"
+        )
+    )
+    top = rel.grouped_top_k(
+        seg_scores, ["seg"], [F.desc("score"), F.col("part")], max(ks),
+        rank_col="rn",
+    )
+    pos_of = top.groupBy("seg").agg(
+        F.expr(
+            "map_from_entries(collect_list(struct(part, CAST(rn - 1 AS BIGINT))))"
+            " AS pos_of"
+        )
+    )
+    cust = sales.groupBy("cust", "seg").agg(
+        F.expr("collect_list(struct(part, qty)) AS lines"),
+        F.expr(
+            "CAST(sum(CAST(qty AS DECIMAL(18,2))) AS DOUBLE) / count(1) AS mq"
+        ),
+    )
+    state = (
+        cust.selectExpr(
+            "seg",
+            "array_distinct(transform(filter(lines, l -> l.qty > mq),"
+            " l -> l.part)) AS labels",
+        )
+        .filter("size(labels) > 0")
+        .join(F.broadcast(pos_of), on="seg")
+        .selectExpr(
+            "array_sort(filter(transform(labels, p -> element_at(pos_of, p)),"
+            " x -> x IS NOT NULL)) AS hits",
+            "CAST(size(labels) AS BIGINT) AS m",
+        )
+    )
+    return hit_metrics_at_ks(state, ks).selectExpr(
+        "CAST(k AS BIGINT) AS k",
+        "n_users",
+        *[
+            f"round({c}, 6) AS {c}"
+            for c in ("precision_at_k", "recall_at_k", "map_at_k", "ndcg_at_k")
+        ],
+    )
+
+
 @register(
     "ranking_metrics_popularity",
     oracle="""
@@ -537,78 +635,8 @@ def global_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ranking_metrics_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P@20/Recall@20/MAP@20/NDCG@20 of a segment-popularity recommender.
 
-    Recommender: per market segment, top-20 parts by damped revenue score
-    (Q9 formula). Ground truth per customer: parts bought with quantity
-    strictly above the customer's own mean quantity (Q7 semantics,
-    popularity_model.py:52-54). Metrics follow pinned mllib semantics (see
-    operators/ranking_metrics.py); global means rounded to 6dp because a
-    mean over users is reduction-order dependent.
-    """
-    from bigdata_capstone_spark.operators.ranking_metrics import ranking_metrics
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    sales = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(
-            F.broadcast(customer.select("c_custkey", "c_mktsegment")),
-            orders.o_custkey == F.col("c_custkey"),
-        )
-        .select(
-            F.col("c_custkey").alias("cust"),
-            F.col("l_partkey").alias("part"),
-            F.col("c_mktsegment").alias("seg"),
-            F.col("l_extendedprice").alias("price"),
-            F.col("l_quantity").alias("qty"),
-        )
-    )
-    # ONE aggregation pass over the fact join at (cust, part, seg) grain;
-    # seg_scores / cust_mean / labels are cheap regroups of the ~|cust×part|
-    # result instead of three full re-scans of the cached fact (decimal
-    # partial sums re-aggregate exactly, so values are unchanged). The
-    # grain table is cached — it feeds three consumers.
-    grain = (
-        sales.groupBy("cust", "part", "seg")
-        .agg(
-            F.sum(F.col("price").cast("decimal(18,2)")).alias("price_d"),
-            F.sum(F.col("qty").cast("decimal(18,2)")).alias("qty_d"),
-            F.count(F.lit(1)).alias("n"),
-            F.max("qty").alias("max_qty"),
-        )
-        .cache()
-    )
-    seg_scores = grain.groupBy("seg", "part").agg(
-        (
-            F.sum("price_d").cast("double")
-            / (F.sum("n") + F.lit(100.0))
-        ).alias("score")
-    )
-    preds = rel.grouped_top_k(
-        seg_scores, ["seg"], [F.desc("score"), F.col("part")], 20, rank_col="rn"
-    ).select("seg", "part", (F.col("rn") - 1).alias("pos"))
-    cust_mean = grain.groupBy("cust").agg(
-        (F.sum("qty_d").cast("double") / F.sum("n")).alias("mq")
-    )
-    labels = (
-        grain.join(F.broadcast(cust_mean), on="cust")
-        .filter(F.col("max_qty") > F.col("mq"))
-        .select("cust", "part")
-    )
-    cust_preds = customer.select(
-        F.col("c_custkey").alias("cust"), F.col("c_mktsegment").alias("seg")
-    ).join(F.broadcast(preds), on="seg").select("cust", "part", "pos")
-
-    out = ranking_metrics(
-        cust_preds, labels, 20, user_col="cust", item_col="part", pos_col="pos"
-    )
-    return out.select(
-        "n_users",
-        F.round("precision_at_k", 6).alias("precision_at_k"),
-        F.round("recall_at_k", 6).alias("recall_at_k"),
-        F.round("map_at_k", 6).alias("map_at_k"),
-        F.round("ndcg_at_k", 6).alias("ndcg_at_k"),
-    )
+    :func:`segment_popularity_eval` at k = 20."""
+    return segment_popularity_eval(spark, sf_dir, [20]).drop("k")
 
 
 # --------------------------------------------------------------------------

@@ -2963,7 +2963,7 @@ def streaming_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_p99_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail-latency-style outlier scan COMPOSED from the quantile-bin
-    sketch: per-type p99 thresholds come from the (cached, mergeable)
+    sketch: per-type p99 thresholds come from the (mergeable)
     bin sketch — never a per-type sort — and broadcast back onto the
     scan as a plain filter. This is the production shape for 'alert on
     values above p99' at 100 TB: the sketch is constant-size state the
@@ -3191,13 +3191,12 @@ def doc_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def event_value_quantiles_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL quantiles (p50/p90/p99.9) via the bin sketch with a constant
-    group column — the sanctioned route for corpus-wide order statistics
-    after quantiles_from_bins started rejecting empty group_cols (an
-    empty partitionBy would plan the banned single-partition window over
-    the RAW rows; the constant column keeps the window over the
-    sketch-sized bin frame only, which is bounded by value-range/width
-    however large the corpus). Also exercises the sub-percent quantile
-    labels (p99_9) the round-4 advice flagged as collision-prone."""
+    group column — the sanctioned route for corpus-wide order statistics,
+    since quantiles_from_bins takes non-empty group_cols (its per-group
+    aggregate runs over the sketch-sized bin frame only, which is
+    bounded by value-range/width however large the corpus). Also
+    exercises the sub-percent quantile labels (p99_9) the round-4
+    advice flagged as collision-prone."""
     from bigdata_capstone_spark.operators.sketches import (
         quantile_bins,
         quantiles_from_bins,
@@ -5684,7 +5683,9 @@ def quantile_sketch_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     r9 per-shard one-pass form had already cut it from 8 scans); the
     merge over the four genuine per-shard states is unchanged, and the
     merged bits equal the one-shot build by the tested canonical-state
-    law."""
+    law. The partials' checkpoint is lazy: building runs no job, and
+    the query's first stage computes them once and caches the blocks
+    the four shard filters read."""
     from bigdata_capstone_spark.operators.sketches import (
         qsketch_merge,
         qsketch_partials_onepass_keyed,
@@ -5699,7 +5700,7 @@ def quantile_sketch_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id"),
         F.col("value"),
         _QSKETCH_CAPACITY,
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     states = [
         partials.filter(F.col("__shard") == i).drop("__shard")
         for i in range(4)
@@ -6752,7 +6753,7 @@ def weighted_quantile_sketch_shard_merge(
     still a per-item PRF, so the canonical-state group law carries
     over with weights riding along. All four shard states come out of
     ONE corpus pass (r10: keyed one-pass kernel — 1 scan + 1
-    materialization instead of 4 of each; see
+    materialization instead of 4 of each, checkpointed lazily; see
     quantile_sketch_shard_merge)."""
     from bigdata_capstone_spark.operators.sketches import (
         wqsketch_merge,
@@ -6774,7 +6775,7 @@ def weighted_quantile_sketch_shard_merge(
         F.col("n_chars"),
         F.col("__w"),
         _WQS_CAPACITY,
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
     states = [
         partials.filter(F.col("__shard") == i).drop("__shard")
         for i in range(4)

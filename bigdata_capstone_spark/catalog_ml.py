@@ -275,80 +275,13 @@ def ranking_metrics_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P/Recall/MAP/NDCG at k ∈ {5, 10, 20} for the segment-popularity
     recommender in ONE pass — the evaluation-sweep shape (the reference
     re-ran its whole eval per grid point, popularity_model.py:73-97; this
-    computes every cutoff from a single exploded+windowed frame, one
-    shuffle on user). Oracle: the single-k oracle instantiated per k and
-    UNION ALL'd — three logical evals, but the Spark side pays one."""
-    from pyspark.sql import functions as FF
+    builds every customer's hit positions once and filters them per
+    cutoff: :func:`catalog.segment_popularity_eval`). Oracle: the
+    single-k oracle instantiated per k and UNION ALL'd — three logical
+    evals, but the Spark side pays one."""
+    from bigdata_capstone_spark.catalog import segment_popularity_eval
 
-    from bigdata_capstone_spark.operators.ranking_metrics import (
-        ranking_metrics_at_ks,
-    )
-    from bigdata_capstone_spark.sources.tables import load_table
-
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    sales = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(
-            FF.broadcast(customer.select("c_custkey", "c_mktsegment")),
-            orders.o_custkey == FF.col("c_custkey"),
-        )
-        .select(
-            FF.col("c_custkey").alias("cust"),
-            FF.col("l_partkey").alias("part"),
-            FF.col("c_mktsegment").alias("seg"),
-            FF.col("l_extendedprice").alias("price"),
-            FF.col("l_quantity").alias("qty"),
-        )
-    )
-    grain = (
-        sales.groupBy("cust", "part", "seg")
-        .agg(
-            FF.sum(FF.col("price").cast("decimal(18,2)")).alias("price_d"),
-            FF.sum(FF.col("qty").cast("decimal(18,2)")).alias("qty_d"),
-            FF.count(FF.lit(1)).alias("n"),
-            FF.max("qty").alias("max_qty"),
-        )
-        .cache()
-    )
-    seg_scores = grain.groupBy("seg", "part").agg(
-        (FF.sum("price_d").cast("double") / (FF.sum("n") + FF.lit(100.0))).alias(
-            "score"
-        )
-    )
-    from bigdata_capstone_spark.operators import relational as rel
-
-    preds = rel.grouped_top_k(
-        seg_scores, ["seg"], [FF.desc("score"), FF.col("part")], 20, rank_col="rn"
-    ).select("seg", "part", (FF.col("rn") - 1).alias("pos"))
-    cust_mean = grain.groupBy("cust").agg(
-        (FF.sum("qty_d").cast("double") / FF.sum("n")).alias("mq")
-    )
-    labels = (
-        grain.join(FF.broadcast(cust_mean), on="cust")
-        .filter(FF.col("max_qty") > FF.col("mq"))
-        .select("cust", "part")
-    )
-    cust_preds = (
-        customer.select(
-            FF.col("c_custkey").alias("cust"), FF.col("c_mktsegment").alias("seg")
-        )
-        .join(FF.broadcast(preds), on="seg")
-        .select("cust", "part", "pos")
-    )
-    out = ranking_metrics_at_ks(
-        cust_preds, labels, [5, 10, 20], user_col="cust", item_col="part",
-        pos_col="pos",
-    )
-    return out.select(
-        FF.col("k").cast("long").alias("k"),
-        "n_users",
-        FF.round("precision_at_k", 6).alias("precision_at_k"),
-        FF.round("recall_at_k", 6).alias("recall_at_k"),
-        FF.round("map_at_k", 6).alias("map_at_k"),
-        FF.round("ndcg_at_k", 6).alias("ndcg_at_k"),
-    )
+    return segment_popularity_eval(spark, sf_dir, [5, 10, 20])
 
 
 @register(

@@ -230,7 +230,7 @@ def ks_statistic(
     # plans the banned unpartitioned WindowExec (plan-shape test.
     # caught it); a grouping attribute survives. Window width is still
     # bounded by the bin count either way.
-    # the cache is the same optimizer barrier quantiles_from_bins uses:
+    # the cache is an optimizer barrier (relational.constant_scope):
     # without it FoldablePropagation pushes the literal scope THROUGH
     # the aggregate and still folds the window's partition spec away
     # (plan-shape test caught both variants). Bin-sized frame — bytes.

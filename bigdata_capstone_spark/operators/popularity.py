@@ -25,7 +25,6 @@ from pyspark.sql.window import Window
 
 from bigdata_capstone_spark.functions.portable import exact_sum
 from bigdata_capstone_spark.operators.aggregates import damped_mean
-from bigdata_capstone_spark.operators.relational import grouped_top_k
 
 
 def damped_item_scores(
@@ -80,27 +79,6 @@ def recommend_top_k(
         .select(item_col, "popularity_score", "rank")
     )
     return users.select(user_col).distinct().crossJoin(F.broadcast(top_items))
-
-
-def recommend_top_k_per_user(
-    scored: DataFrame,
-    k: int,
-    user_col: str = "userId",
-    item_col: str = "movieId",
-    score_col: str = "popularity_score",
-    method: str = "row_number",
-) -> DataFrame:
-    """Per-user top-k over per-(user,item) scores (the general path, used
-    when scores differ per user, e.g. ALS predictions —
-    als_recommendation.py:21-23)."""
-    return grouped_top_k(
-        scored,
-        [user_col],
-        [F.desc(score_col), F.col(item_col)],
-        k,
-        method=method,
-        rank_col="rank",
-    )
 
 
 def grid_search_damping(

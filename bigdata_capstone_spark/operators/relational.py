@@ -472,8 +472,8 @@ def constant_scope(df: DataFrame, name: str = "__s") -> DataFrame:
     Callers must only use this on frames already bounded by construction
     (sketch states, bin contingencies, per-group summaries) — the cache
     is then byte-sized and usually reused by a sibling total/count
-    aggregate anyway. ks_statistic (drift.py) and quantiles_from_bins
-    (sketches.py) embed this same recipe inline and predate the helper;
+    aggregate anyway. ks_statistic (drift.py) embeds this same recipe
+    inline and predates the helper;
     the registry-wide no-unpartitioned-window walk
     (tests/test_plan_shapes.py) guards all consumers against a future
     Spark version changing the optimizer behavior."""

@@ -322,53 +322,51 @@ def quantiles_from_bins(
 ) -> DataFrame:
     """Per-group quantile estimates from a bin sketch: for each q, the
     upper edge of the first bin whose cumulative count reaches
-    ``ceil(q * total)``. The cumsum window partitions by group (bounded
-    by occupied bins per group); totals broadcast back as a tiny
-    aggregate. The bin frame feeds both consumers, so it is cached
-    (sketch-sized by definition) — without this the upstream fact scan
-    would run TWICE (once for the cumsum, once for the totals).
+    ``ceil(q * total)``. ONE aggregate per group sorts the group's
+    (bin, cnt) pairs into an array — bounded by the group's occupied
+    bins, sketch-sized by definition — and each pick is a left fold
+    that keeps the running count and takes the first non-NULL bin whose
+    running count reaches the target (NULL bins sort first and count,
+    as in an ascending running-sum window). No window, no join, no
+    cache: the bin frame is read once and a call leaves nothing behind.
 
-    ``group_cols`` must be non-empty: an empty list would plan
-    ``Window.partitionBy()`` — the single-partition WindowExec this repo
-    bans. For a global sketch, add a constant group column (the bins
-    frame is sketch-sized, so one group is still tiny) — see
-    ``event_value_quantiles_global`` in the catalog.
+    ``group_cols`` must be non-empty: the sketch is per group; for a
+    global sketch add a constant group column (see
+    ``event_value_quantiles_global`` in the catalog).
     """
-    from pyspark.sql.window import Window
-
     if not group_cols:
         raise ValueError(
-            "quantiles_from_bins requires non-empty group_cols (an empty "
-            "partitionBy would plan a single-partition window); add a "
+            "quantiles_from_bins requires non-empty group_cols; add a "
             "constant group column for the global case"
         )
     labels = _check_labels(qs)
-
-    bins = bins.cache()
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy("bin")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    agg = bins.groupBy(*group_cols).agg(
+        F.sum("cnt").alias("n_rows"),
+        F.array_sort(F.collect_list(F.struct("bin", "cnt"))).alias("__s"),
     )
-    cum = bins.withColumn("cum", F.sum("cnt").over(w))
-    totals = bins.groupBy(*group_cols).agg(F.sum("cnt").alias("total"))
-    j = cum.join(F.broadcast(totals), on=group_cols)
-    aggs = [
-        F.min(
-            F.when(
-                F.col("cum") >= F.ceil(F.lit(q) * F.col("total")),
-                F.col("bin"),
+
+    def pick(q: float) -> Column:
+        need = F.ceil(F.lit(q) * F.col("n_rows"))
+
+        def step(acc: Column, x: Column) -> Column:
+            run = acc["run"] + x["cnt"]
+            hit = F.when(run >= need, x["bin"])
+            return F.struct(
+                run.alias("run"), F.coalesce(acc["b"], hit).alias("b")
             )
-        ).alias(f"__b{lbl}")
-        for q, lbl in zip(qs, labels)
-    ]
-    out = j.groupBy(*group_cols).agg(*aggs, F.max("total").alias("n_rows"))
-    for lbl in labels:
-        out = out.withColumn(
-            f"p{lbl}",
-            F.round((F.col(f"__b{lbl}") + 1) * F.lit(bin_width), 6),
-        ).drop(f"__b{lbl}")
-    return out
+
+        init = F.struct(
+            F.lit(0).cast("long").alias("run"),
+            F.lit(None).cast("long").alias("b"),
+        )
+        first = F.aggregate(F.col("__s"), init, step)["b"]
+        return F.round((first + 1) * F.lit(bin_width), 6)
+
+    return agg.select(
+        *group_cols,
+        "n_rows",
+        *[pick(q).alias(f"p{lbl}") for q, lbl in zip(qs, labels)],
+    )
 
 
 def hll_set_overlap(

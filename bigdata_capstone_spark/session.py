@@ -16,6 +16,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_PARENT = os.path.dirname(
+    os.path.dirname(os.path.abspath(__file__))
+)
+
 
 def build_session(
     app_name: str = "bigdata_capstone_spark",
@@ -62,6 +66,10 @@ def build_session(
         # for many minutes, piling up dead shuffle/broadcast state that
         # slows later queries in long sessions. Default is 30min.
         .config("spark.cleaner.periodicGC.interval", "1min")
+        # Python workers (mapInPandas, pandas UDFs) import this package
+        # by name; they inherit neither the driver's sys.path nor its
+        # working directory, so hand them the package's parent directory
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -127,6 +127,34 @@ def test_als_beats_popularity_ndcg(spark):
     assert als_ndcg > pop_ndcg * 1.10, (als_ndcg, pop_ndcg)
 
 
+def test_grid_search_als_picks_highest_ndcg(spark):
+    """M8's ALS grid (als_recommendation.py:47-72) on a tiny ratings
+    frame: one result per grid point, every metric in [0, 1], and
+    ``best`` is the point with the highest NDCG. The metrics run on
+    ALS's posexploded recommendations."""
+    from bigdata_capstone_spark.operators.als import grid_search_als
+
+    ratings = spark.createDataFrame(
+        [
+            (u, i, float(1 + (u * 7 + i * 3) % 5))
+            for u in range(12)
+            for i in range(10)
+            if (u + i) % 3
+        ],
+        "userId INT, movieId INT, rating FLOAT",
+    )
+    labels = ground_truth(ratings)
+    best, results = grid_search_als(
+        ratings, labels, ranks=[2, 4], reg_params=[0.1], k=5, max_iter=2
+    )
+    assert [(r["rank"], r["regParam"]) for r in results] == [(2, 0.1), (4, 0.1)]
+    for r in results:
+        assert r["n_users"] > 0
+        for m in ("precision_at_k", "recall_at_k", "map_at_k", "ndcg_at_k"):
+            assert 0.0 <= r[m] <= 1.0, (r["rank"], m, r[m])
+    assert best == max(results, key=lambda r: r["ndcg_at_k"])
+
+
 def test_csv_roundtrip(spark, clean, tmp_path):
     """S1/S2: schema'd CSV sink + scan roundtrip preserves rows exactly."""
     from bigdata_capstone_spark.sources.sinks import write_csv

@@ -288,36 +288,15 @@ def _build_jobs(spark, build):
     return df, int(dag.nextJobId()) - j0
 
 
-def test_quantile_sketch_entries_build_without_barriers(spark, sf_small):
-    """The sketch entries are lazy plans: building the one-pass
-    histogram runs no Spark job, the shard merge at most one (the
-    keyed partials' checkpoint), and neither optimized plan holds a
-    Window or a cached relation. The one-pass histogram still scans
-    its source exactly once when executed."""
+def _input_records(spark, run) -> int:
+    """Input records of every stage that ``run()`` executes and that
+    was not skipped: parquet rows scanned plus rows re-read from
+    cached blocks."""
     from py4j.protocol import Py4JJavaError
 
-    from bigdata_capstone_spark.catalog import QUERIES
-    from bigdata_capstone_spark.sources.tables import load_table
-
     sc = spark.sparkContext._jsc.sc()
-    for name, max_jobs in (
-        ("orders_price_histogram", 0),
-        ("quantile_sketch_shard_merge", 1),
-    ):
-        df, jobs = _build_jobs(spark, lambda: QUERIES[name](spark, sf_small))
-        assert jobs <= max_jobs, (name, jobs)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        assert "Window" not in plan, (name, plan[:3000])
-        assert "InMemoryRelation" not in plan, (name, plan[:3000])
-
-    orders = load_table(spark, sf_small, "orders")
-    n_orders = orders.count()
-    n_partial = sk.qsketch_partials_onepass(
-        orders, F.col("o_orderkey"), F.col("o_totalprice"), 512
-    ).count()
-    df = QUERIES["orders_price_histogram"](spark, sf_small)
     s0 = int(sc.dagScheduler().nextStageId())
-    assert len(df.collect()) == 1
+    run()
     s1 = int(sc.dagScheduler().nextStageId())
     sc.listenerBus().waitUntilEmpty()
     no_q = spark.sparkContext._gateway.new_array(
@@ -333,9 +312,54 @@ def test_quantile_sketch_entries_build_without_barriers(spark, sf_small):
             st = attempts.apply(i)
             if st.status().toString() != "SKIPPED":
                 read += int(st.inputRecords())
+    return read
+
+
+def test_quantile_sketch_entries_build_without_barriers(
+    spark, sf_small, sf_oracle
+):
+    """The sketch entries are lazy plans: building the one-pass
+    histogram or the shard merge runs no Spark job, and neither
+    optimized plan holds a Window or a cached relation. Executed, each
+    scans its source exactly once."""
+    from bigdata_capstone_spark.catalog import QUERIES
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    for name in ("orders_price_histogram", "quantile_sketch_shard_merge"):
+        df, jobs = _build_jobs(spark, lambda: QUERIES[name](spark, sf_small))
+        assert jobs == 0, (name, jobs)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "Window" not in plan, (name, plan[:3000])
+        assert "InMemoryRelation" not in plan, (name, plan[:3000])
+
+    # a table another test left cached would be read as cached batches,
+    # not rows: count reads against the parquet files
+    spark.catalog.clearCache()
+    orders = load_table(spark, sf_small, "orders")
+    n_orders = orders.count()
+    n_partial = sk.qsketch_partials_onepass(
+        orders, F.col("o_orderkey"), F.col("o_totalprice"), 512
+    ).count()
+    df = QUERIES["orders_price_histogram"](spark, sf_small)
+    read = _input_records(spark, lambda: df.collect())
     # input records = one parquet scan + one re-read of the partials
     # from the blocks their first computation cached
     assert read == n_orders + n_partial, (read, n_orders, n_partial)
+
+    # at sf_oracle the partials are far fewer than the events, so a
+    # per-shard rescan of events could not hide in this count
+    events = load_table(spark, sf_oracle, "events")
+    n_events = events.count()
+    n_partial = sk.qsketch_partials_onepass_keyed(
+        events, F.col("event_id") % 4, F.col("event_id"), F.col("value"), 512
+    ).count()
+    assert n_partial < n_events
+    df = QUERIES["quantile_sketch_shard_merge"](spark, sf_oracle)
+    read = _input_records(spark, lambda: df.collect())
+    # one events scan computes the partials; the other three shard
+    # filters re-read their cached blocks, and the merge re-reads its
+    # cached union (the four shards partition the partials)
+    assert read == n_events + 4 * n_partial, (read, n_events, n_partial)
 
 
 def test_qsketch_empty_merge_and_quantiles(spark):
@@ -363,4 +387,25 @@ def test_qsketch_cdf_leaves_no_cache(spark):
     assert [tuple(r) for r in rows] == [
         (4.0, 10, 0.5), (-1.0, 10, 0.0), (100.0, 10, 1.0)
     ]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_quantiles_from_bins_leaves_no_cache(spark):
+    """quantiles_from_bins is one aggregate per group: each pick is the
+    first bin whose running count reaches ceil(q·total), with a NULL
+    bin sorted first and counted (as an ascending running-sum window
+    orders it) and duplicate bins of an unmerged union summed, and a
+    call leaves no cached relation behind."""
+    bins = spark.createDataFrame(
+        [("a", None, 2), ("a", 0, 3), ("a", 1, 1), ("a", 1, 2), ("a", 5, 2),
+         ("b", 3, 4)],
+        "grp STRING, bin BIGINT, cnt BIGINT",
+    )
+    spark.catalog.clearCache()
+    rows = sk.quantiles_from_bins(bins, ["grp"], 2.0, qs=(0.2, 0.5, 0.7, 0.9))
+    got = {r["grp"]: tuple(r)[1:] for r in rows.collect()}
+    assert got == {
+        "a": (10, 2.0, 2.0, 4.0, 12.0),
+        "b": (4, 8.0, 8.0, 8.0, 8.0),
+    }
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
