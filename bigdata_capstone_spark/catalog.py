@@ -4948,9 +4948,9 @@ def embedding_semantic_communities(
     Scale shape: vectors stop moving after the graph build (the edge
     list is |V|·k, aggregated); the mutual-KNN graph has symmetrized
     degree ≤ k BY CONSTRUCTION (each mutual edge at a node occupies one
-    of its k top-k slots), so the caller declares ``max_degree=5`` and
-    LPA runs its FUSED fixed-round plan: one exchange per round, no
-    per-round materialization barrier (r11; see label_propagation)."""
+    of its k top-k slots), so every LPA round's vote frame is at most
+    6·|V| rows; the rounds stay lazy, with no per-round
+    materialization barrier (see label_propagation)."""
     from bigdata_capstone_spark.operators.graph import label_propagation
     from bigdata_capstone_spark.operators.simsearch import (
         knn_graph,
@@ -4960,7 +4960,7 @@ def embedding_semantic_communities(
     emb = load_table(spark, sf_dir, "embeddings").cache()
     g = knn_graph(emb, dim=64, k=5, n_planes=6, n_tables=2,
                   max_bucket=100).cache()
-    return label_propagation(mutual_knn_edges(g), rounds=3, max_degree=5)
+    return label_propagation(mutual_knn_edges(g), rounds=3)
 
 
 # --------------------------------------------------------------------------

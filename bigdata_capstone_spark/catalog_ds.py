@@ -26,15 +26,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_capstone_spark.catalog import ORACLE_SQL, register
-from bigdata_capstone_spark.functions.portable import md5_long, md5_long_sql
+from bigdata_capstone_spark.functions.portable import (
+    exact_sum,
+    md5_long,
+    md5_long_sql,
+)
 from bigdata_capstone_spark.operators import relational as rel
 from bigdata_capstone_spark.session import ensure_utc
 from bigdata_capstone_spark.sources.tables import load_table
-
-
-def _dec_sum(col: F.Column, scale: int = 4) -> F.Column:
-    """Order-independent money sum: DECIMAL accumulate, double result."""
-    return F.sum(col.cast(f"decimal(18,{scale})")).cast("double")
 
 
 # --------------------------------------------------------------------------
@@ -69,7 +68,7 @@ def discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_quantity") < 24)
         )
         .agg(
-            _dec_sum(F.col("l_extendedprice") * F.col("l_discount")).alias(
+            exact_sum(F.col("l_extendedprice") * F.col("l_discount"), 4).alias(
                 "revenue_effect"
             ),
             F.count(F.lit(1)).alias("n_rows"),
@@ -111,7 +110,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).join(F.broadcast(part), F.col("p_partkey") == F.col("l_partkey"))
     promo = F.when(F.col("p_type") == "PROMO", disc_price).otherwise(F.lit(0))
     return joined.agg(
-        F.round(100.0 * _dec_sum(promo) / _dec_sum(disc_price), 6).alias(
+        F.round(100.0 * exact_sum(promo, 4) / exact_sum(disc_price, 4), 6).alias(
             "promo_revenue_pct"
         ),
         F.count(F.lit(1)).alias("n_rows"),
@@ -154,7 +153,7 @@ def top_supplier_by_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("l_suppkey")
         .agg(
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
                 "total_revenue"
             )
         )
@@ -197,9 +196,9 @@ def important_parts_by_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice")
     pv = li.groupBy("l_partkey").agg(
-        _dec_sum(F.col("l_extendedprice"), 2).alias("part_value")
+        exact_sum(F.col("l_extendedprice"), 2).alias("part_value")
     )
-    tot = li.agg(_dec_sum(F.col("l_extendedprice"), 2).alias("total_value"))
+    tot = li.agg(exact_sum(F.col("l_extendedprice"), 2).alias("total_value"))
     return (
         pv.crossJoin(F.broadcast(tot))
         .filter(F.col("part_value") > 0.0007 * F.col("total_value"))
@@ -244,7 +243,7 @@ def small_quantity_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     pa = li.groupBy("l_partkey").agg(
         (
-            _dec_sum(F.col("l_quantity"), 2) / F.count(F.lit(1))
+            exact_sum(F.col("l_quantity"), 2) / F.count(F.lit(1))
         ).alias("avg_qty")
     )
     return (
@@ -255,7 +254,7 @@ def small_quantity_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(pa), on="l_partkey")
         .filter(F.col("l_quantity") < 0.5 * F.col("avg_qty"))
         .agg(
-            (_dec_sum(F.col("l_extendedprice"), 2) / 7.0).alias(
+            (exact_sum(F.col("l_extendedprice"), 2) / 7.0).alias(
                 "avg_yearly_revenue"
             ),
             F.count(F.lit(1)).alias("n_rows"),
@@ -297,7 +296,7 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     big = (
         li.groupBy("l_orderkey")
-        .agg(_dec_sum(F.col("l_quantity"), 2).alias("total_qty"))
+        .agg(exact_sum(F.col("l_quantity"), 2).alias("total_qty"))
         .filter(F.col("total_qty") > 150.0)
     )
     joined = (
@@ -343,7 +342,7 @@ def rich_low_activity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders").select("o_custkey")
     thresh = cust.filter(F.col("c_acctbal") > 0).agg(
         (
-            _dec_sum(F.col("c_acctbal"), 2) / F.count(F.lit(1))
+            exact_sum(F.col("c_acctbal"), 2) / F.count(F.lit(1))
         ).alias("avg_bal")
     )
     cnt = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n_orders"))
@@ -357,7 +356,7 @@ def rich_low_activity_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
-            _dec_sum(F.col("c_acctbal"), 2).alias("total_acctbal"),
+            exact_sum(F.col("c_acctbal"), 2).alias("total_acctbal"),
         )
     )
 
@@ -496,7 +495,7 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("l_shipdate").alias("ship_year"),
         )
         .agg(
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
                 "revenue"
             ),
             F.count(F.lit(1)).alias("n_items"),
@@ -1120,7 +1119,7 @@ def brand_size_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(cond)
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
                 "revenue"
             ),
         )
@@ -1414,7 +1413,7 @@ def event_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
     n = F.count(F.lit(1))
-    mu = _dec_sum(F.col("value"), 2) / n
+    mu = exact_sum(F.col("value"), 2) / n
     ex2 = F.sum((F.col("value") * F.col("value")).cast("decimal(24,4)")).cast(
         "double"
     ) / n
@@ -1742,7 +1741,7 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n1), F.col("n1_key") == F.col("s_nationkey"))
         .groupBy(F.year("l_shipdate").alias("ship_year"))
         .agg(
-            F.round(_dec_sum(nation_rev) / _dec_sum(rev), 9).alias("mkt_share"),
+            F.round(exact_sum(nation_rev, 4) / exact_sum(rev, 4), 9).alias("mkt_share"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -1802,7 +1801,7 @@ def nation_profit_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
         .agg(
-            _dec_sum(profit).alias("sum_profit"),
+            exact_sum(profit, 4).alias("sum_profit"),
             F.count(F.lit(1)).alias("n_items"),
         )
     )
@@ -1858,7 +1857,7 @@ def returned_item_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(orders, F.col("o_orderkey") == F.col("l_orderkey"))
         .groupBy("o_custkey")
         .agg(
-            _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4).alias(
                 "revenue"
             ),
             F.count(F.lit(1)).alias("n_returned"),
@@ -2057,7 +2056,7 @@ def hash_sampled_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return sampled.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_sampled"),
-        _dec_sum(F.col("o_totalprice"), 2).alias("sampled_value"),
+        exact_sum(F.col("o_totalprice"), 2).alias("sampled_value"),
     )
 
 
@@ -2310,7 +2309,6 @@ def bloom_pruned_segment_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     PLAIN semi-join — proving the bloom probe changes cost, never
     results (no false negatives; false positives removed by the exact
     join)."""
-    from bigdata_capstone_spark.functions.portable import exact_sum
     from bigdata_capstone_spark.operators.sketches import (
         bloom_build,
         bloom_probe,

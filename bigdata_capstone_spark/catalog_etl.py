@@ -3332,6 +3332,55 @@ def bm25_incremental_dfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _recrawl_versions(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The re-crawl fixture: ``(v1, v2, diff)``. v1 is the corpus as
+    loaded; v2 trims the head (doc_id < 50), revises every 7th doc
+    (text + ' rev2') and adds 30 new arrivals (doc_id + 100000);
+    diff is their ``snapshot_diff`` on doc_id by text. The corpus is
+    cached so the wide text column scans once across the v1/v2
+    slices (same policy as docs_token_budget_fill)."""
+    from bigdata_capstone_spark.operators.reconcile import snapshot_diff
+
+    docs = load_table(spark, sf_dir, "documents").cache()
+    v1 = docs.select("doc_id", "text")
+    v2 = (
+        docs.filter(F.col("doc_id") >= 50)
+        .select(
+            "doc_id",
+            F.when(
+                F.col("doc_id") % 7 == 0,
+                F.concat(F.col("text"), F.lit(" rev2")),
+            )
+            .otherwise(F.col("text"))
+            .alias("text"),
+        )
+        .unionByName(
+            docs.filter(F.col("doc_id") < 30).select(
+                (F.col("doc_id") + 100000).alias("doc_id"),
+                F.concat(
+                    F.lit("new crawl doc "),
+                    F.col("doc_id").cast("string"),
+                ).alias("text"),
+            )
+        )
+    )
+    diff = snapshot_diff(v1, v2, on=["doc_id"], compare_cols=["text"])
+    return v1, v2, diff
+
+
+def _recrawl_arrivals(v2: DataFrame, diff: DataFrame) -> DataFrame:
+    """The re-crawl's arriving batch: v2's added and changed docs."""
+    return v2.join(
+        diff.filter(F.col("status").isin("added", "changed")).select(
+            "doc_id"
+        ),
+        on="doc_id",
+        how="left_semi",
+    )
+
+
 @register(
     "corpus_recrawl_diff",
     oracle="""
@@ -3370,36 +3419,8 @@ def corpus_recrawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl scale both sides hash-partition on the key once — and the
     'changed' set this emits is exactly the O(delta) input the
     incremental twins (bm25 df, IVF-PQ encode) consume."""
-    from bigdata_capstone_spark.operators.reconcile import snapshot_diff
-
     ensure_utc(spark)
-    docs = load_table(spark, sf_dir, "documents").cache()
-    # 3 version/shard slices re-read the wide text column;
-    # cache so the corpus scans once (same policy as
-    # docs_token_budget_fill)
-    v1 = docs.select("doc_id", "text")
-    v2 = (
-        docs.filter(F.col("doc_id") >= 50)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(F.col("text"), F.lit(" rev2")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") < 30).select(
-                (F.col("doc_id") + 100000).alias("doc_id"),
-                F.concat(
-                    F.lit("new crawl doc "),
-                    F.col("doc_id").cast("string"),
-                ).alias("text"),
-            )
-        )
-    )
-    return snapshot_diff(v1, v2, on=["doc_id"], compare_cols=["text"])
+    return _recrawl_versions(spark, sf_dir)[2]
 
 
 @register(
@@ -3634,40 +3655,10 @@ def streaming_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_near_dup_pairs,
         near_dup_index,
     )
-    from bigdata_capstone_spark.operators.reconcile import snapshot_diff
 
     ensure_utc(spark)
-    docs = load_table(spark, sf_dir, "documents").cache()
-    v1 = docs.select("doc_id", "text")
-    v2 = (
-        docs.filter(F.col("doc_id") >= 50)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(F.col("text"), F.lit(" rev2")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") < 30).select(
-                (F.col("doc_id") + 100000).alias("doc_id"),
-                F.concat(
-                    F.lit("new crawl doc "),
-                    F.col("doc_id").cast("string"),
-                ).alias("text"),
-            )
-        )
-    )
-    diff = snapshot_diff(v1, v2, on=["doc_id"], compare_cols=["text"])
-    arriving = v2.join(
-        diff.filter(F.col("status").isin("added", "changed")).select(
-            "doc_id"
-        ),
-        on="doc_id",
-        how="left_semi",
-    )
+    v1, v2, diff = _recrawl_versions(spark, sf_dir)
+    arriving = _recrawl_arrivals(v2, diff)
     bk, sh, sz = near_dup_index(v1, n_perm=8, bands=4, shingle_n=3)
     # the persisted-index stand-in: cache all three relations so every
     # trigger probes the SAME materialized index instead of re-deriving
@@ -3732,42 +3723,10 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_near_dup_pairs,
         near_dup_index,
     )
-    from bigdata_capstone_spark.operators.reconcile import snapshot_diff
 
     ensure_utc(spark)
-    docs = load_table(spark, sf_dir, "documents").cache()
-    # same 2-slice v2 derivation as corpus_recrawl_diff (cache: the wide
-    # text column scans once across the v1/v2 slices)
-    v1 = docs.select("doc_id", "text")
-    v2 = (
-        docs.filter(F.col("doc_id") >= 50)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(F.col("text"), F.lit(" rev2")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") < 30).select(
-                (F.col("doc_id") + 100000).alias("doc_id"),
-                F.concat(
-                    F.lit("new crawl doc "),
-                    F.col("doc_id").cast("string"),
-                ).alias("text"),
-            )
-        )
-    )
-    diff = snapshot_diff(v1, v2, on=["doc_id"], compare_cols=["text"])
-    batch = v2.join(
-        diff.filter(F.col("status").isin("added", "changed")).select(
-            "doc_id"
-        ),
-        on="doc_id",
-        how="left_semi",
-    )
+    v1, v2, diff = _recrawl_versions(spark, sf_dir)
+    batch = _recrawl_arrivals(v2, diff)
     index = near_dup_index(v1, n_perm=8, bands=4, shingle_n=3)
     out = incremental_near_dup_pairs(
         index,
@@ -3871,43 +3830,13 @@ def dedup_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_near_dup_index_delta,
         near_dup_index,
     )
-    from bigdata_capstone_spark.operators.reconcile import snapshot_diff
 
     ensure_utc(spark)
-    docs = load_table(spark, sf_dir, "documents").cache()
-    v1 = docs.select("doc_id", "text")
-    v2 = (
-        docs.filter(F.col("doc_id") >= 50)
-        .select(
-            "doc_id",
-            F.when(
-                F.col("doc_id") % 7 == 0,
-                F.concat(F.col("text"), F.lit(" rev2")),
-            )
-            .otherwise(F.col("text"))
-            .alias("text"),
-        )
-        .unionByName(
-            docs.filter(F.col("doc_id") < 30).select(
-                (F.col("doc_id") + 100000).alias("doc_id"),
-                F.concat(
-                    F.lit("new crawl doc "),
-                    F.col("doc_id").cast("string"),
-                ).alias("text"),
-            )
-        )
-    )
-    diff = snapshot_diff(v1, v2, on=["doc_id"], compare_cols=["text"])
+    v1, v2, diff = _recrawl_versions(spark, sf_dir)
     removed = diff.filter(
         F.col("status").isin("removed", "changed")
     ).select("doc_id")
-    batch = v2.join(
-        diff.filter(F.col("status").isin("added", "changed")).select(
-            "doc_id"
-        ),
-        on="doc_id",
-        how="left_semi",
-    )
+    batch = _recrawl_arrivals(v2, diff)
     index_v1 = near_dup_index(v1, n_perm=8, bands=4, shingle_n=3)
     bk, sh, sz = apply_near_dup_index_delta(
         index_v1, batch, removed, n_perm=8, bands=4, shingle_n=3

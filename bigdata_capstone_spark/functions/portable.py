@@ -80,12 +80,6 @@ def perm_md5_long(col: Column | str, perm: int) -> Column:
     ).cast("long")
 
 
-def perm_md5_long_sql(expr: str, perm: int) -> str:
-    """DuckDB SQL text equivalent of :func:`perm_md5_long`."""
-    salt, half = divmod(perm, 2)
-    return f"(('0x' || substr(md5('{salt}:' || {expr}), {1 + 15 * half}, 15))::BIGINT)"
-
-
 def exact_sum(col: Column | str, scale: int = 2) -> Column:
     """Order-independent sum of a money-like double, returned as double."""
     c = F.col(col) if isinstance(col, str) else col

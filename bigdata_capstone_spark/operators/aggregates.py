@@ -1,13 +1,13 @@
 """Grouped statistics (SURVEY §2.4 A1-A9).
 
-Count/avg/variance/Pearson-corr/collect_list per group — the reference's
+Count/avg/Pearson-corr/collect_list per group — the reference's
 aggregation surface (splitting_data.py:19; popularity_model.py:28-31;
 customer_segmentation_2.py:36-38,58) — with two hardenings:
 
 - money-like sums/means go through exact DECIMAL accumulation
   (:mod:`bigdata_capstone_spark.functions.portable`) so results are
   reduction-order independent (hash-oracle stable);
-- collected lists get an explicit total order + string join (SURVEY Q1:
+- collected lists get an explicit total order (SURVEY Q1:
   the reference's ``collect_list`` after shuffle has no guaranteed order).
 
 All are single-pass hash aggregations with map-side partial aggregation —
@@ -83,11 +83,6 @@ def pearson_by_group(
     )
 
 
-def variance_by_group(df: DataFrame, keys: Sequence[str], value: str) -> DataFrame:
-    """Sample variance per group (A4; customer_segmentation_2.py:58)."""
-    return df.groupBy(*keys).agg(F.variance(value).alias("variance"))
-
-
 def sorted_list_agg(
     df: DataFrame,
     keys: Sequence[str],
@@ -115,20 +110,6 @@ def sorted_list_agg(
     if k is not None:
         arr = F.slice(arr, 1, k)
     return collected.select(*keys, arr.alias(out_col))
-
-
-def sorted_list_string(
-    df: DataFrame,
-    keys: Sequence[str],
-    order: str,
-    item: str,
-    **kwargs,
-) -> DataFrame:
-    """:func:`sorted_list_agg` with the list joined to a ``,``-string —
-    array-free output for schema-stable oracle comparison."""
-    out_col = kwargs.pop("out_col", "items")
-    df2 = sorted_list_agg(df, keys, order, item, out_col=out_col, **kwargs)
-    return df2.withColumn(out_col, F.array_join(F.col(out_col).cast("array<string>"), ","))
 
 
 def approx_stats(

@@ -1,9 +1,11 @@
 """Lineage truncation for iterative DataFrame loops — shared mechanism.
 
-Every iterative operator in this package (connected_components in
-dedup.py, pagerank / label_propagation in graph.py) must truncate
-lineage each round or round k re-executes rounds 1..k-1 — O(k²) joins
-instead of O(k). Two mechanisms exist, with different failure modes:
+Every iterative operator in this package that runs an action per round
+(connected_components in dedup.py, pagerank / hits in graph.py) must
+truncate lineage each round or round k re-executes rounds 1..k-1 —
+O(k²) joins instead of O(k); label_propagation in graph.py keeps its
+fixed rounds in one lazy plan and truncates only its edge list, once.
+Two mechanisms exist, with different failure modes:
 
 - ``localCheckpoint`` (the default): blocks live on EXECUTOR storage.
   Fast (no distributed-FS write), fine on local mode — but one lost

@@ -14,6 +14,12 @@ Five dedup families over ``documents``, each designed for the 100 TB path:
 - embedding cosine near-dup lives in :mod:`.simsearch` (same machinery as
   similarity search).
 
+The set-Jaccard near-dup operators are compositions of ONE core of three
+private helpers: :func:`_bucket_pairs` (candidate generation, the
+band-bucket join), :func:`_small_buckets` (the hot-bucket cap — the frame
+passed as counted IS the cap rule) and :func:`_jaccard_verify` (the exact
+Jaccard verify, Broder 1997, of candidate or co-occurring pairs).
+
 Hash portability: every hash is md5-derived (functions.portable) so DuckDB
 oracles reproduce values bit-for-bit. At raw-throughput scale you'd swap
 ``xxhash64`` in via ``hash_expr`` — the plan shape is unchanged.
@@ -128,39 +134,87 @@ def lsh_candidate_pairs(
     ``n_perm/bands`` rows; docs sharing any band bucket become a candidate
     pair (idA < idB, dedup'd across bands).
 
-    Scale shape: explode to (band, bucket_key) — |docs|·bands rows — then a
-    groupBy-join on the bucket key. Hot buckets (boilerplate docs, empty
-    documents) are the quadratic blow-up risk: ``max_bucket_size`` drops
-    buckets above the cap BEFORE the pair join, bounding the join fan-out
-    at cap² per bucket. The cap is computed as a ``groupBy(bucket).count``
-    + semi-join back — NOT a ``count(*) OVER (PARTITION BY bucket)``
-    window, which would funnel every row of the hottest bucket into a
-    single window task (the exact straggler the cap exists to defuse);
-    the groupBy partial-aggregates map-side, so the hot key arrives at
-    the reducer as a handful of partial counts, and the semi-join shares
-    the bucket-key shuffle the pair join needs anyway. Documents in an
-    over-full bucket still pair through their other bands; at high
-    duplication rates a cap trades a little recall for quadratic cost,
-    which is the standard production dial (the exact top-of-cluster pairs
-    are recovered by the connected-components closure as long as SOME
-    chain of capped buckets links them).
+    Scale shape: explode to (band, bucket_key) — |docs|·bands rows — then
+    the bucket self-join (:func:`_bucket_pairs`). ``max_bucket_size``
+    drops hot buckets (boilerplate docs, empty documents — the quadratic
+    blow-up risk) BEFORE the pair join (:func:`_small_buckets`).
     """
     buckets = _band_buckets(sigs, n_perm, bands, id_col)
-    if max_bucket_size is not None:
-        small = (
-            buckets.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bucket_n"))
-            .filter(F.col("__bucket_n") <= max_bucket_size)
-            .select("bucket")
-        )
-        buckets = buckets.join(small, on="bucket", how="left_semi")
-    a = buckets.select(F.col(id_col).alias("idA"), "bucket")
-    b = buckets.select(F.col(id_col).alias("idB"), "bucket")
-    return (
-        a.join(b, on="bucket")
-        .filter(F.col("idA") < F.col("idB"))
-        .select("idA", "idB")
-        .distinct()
+    return _bucket_pairs(
+        _small_buckets(buckets, buckets, max_bucket_size), id_col
+    )
+
+
+def _bucket_pairs(
+    bk_a: DataFrame, id_col: str, a: str = "idA", b: str = "idB",
+    bk_b: DataFrame | None = None, key: tuple[str, ...] = ("bucket",),
+) -> DataFrame:
+    """Candidate generation: distinct (a, b) id pairs sharing a band
+    bucket — bk_a ⋈ bk_b on the ``key`` columns, or with no ``bk_b`` the
+    self-join of ``bk_a`` keeping a < b."""
+    left = bk_a.select(F.col(id_col).alias(a), *key)
+    right = (bk_a if bk_b is None else bk_b).select(
+        F.col(id_col).alias(b), *key
+    )
+    pairs = left.join(right, on=list(key))
+    if bk_b is None:
+        pairs = pairs.filter(F.col(a) < F.col(b))
+    return pairs.select(a, b).distinct()
+
+
+def _small_buckets(
+    bk: DataFrame, counted: DataFrame, max_bucket_size: int | None
+) -> DataFrame:
+    """The hot-bucket cap: the rows of ``bk`` whose bucket holds at most
+    ``max_bucket_size`` rows of ``counted`` (all of ``bk`` when None),
+    bounding the pair join's fan-out at cap² per bucket. Which frame is
+    counted IS the cap rule: a self-join counts its own buckets, the
+    cross-corpus join both sides, the incremental join the persisted
+    corpus side only. Documents in an over-full bucket still pair
+    through their other bands: a cap trades a little recall for
+    quadratic cost (the connected-components closure recovers
+    top-of-cluster links as long as SOME chain of capped buckets joins
+    them).
+
+    The count is a ``groupBy(bucket).count`` + semi-join back — NOT a
+    ``count(*) OVER (PARTITION BY bucket)`` window, which would funnel
+    every row of the hottest bucket into a single window task (the exact
+    straggler the cap exists to defuse); the groupBy partial-aggregates
+    map-side, so the hot key arrives at the reducer as a handful of
+    partial counts, and the semi-join shares the bucket-key shuffle the
+    pair join needs anyway."""
+    if max_bucket_size is None:
+        return bk
+    small = (
+        counted.groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("__bucket_n"))
+        .filter(F.col("__bucket_n") <= max_bucket_size)
+        .select("bucket")
+    )
+    return bk.join(small, on="bucket", how="left_semi")
+
+
+def _jaccard_verify(
+    cands: DataFrame | None, side_a: DataFrame, side_b: DataFrame,
+    min_jaccard: float, id_col: str, a: str = "idA", b: str = "idB",
+) -> DataFrame:
+    """Exact Jaccard of (a, b) pairs over two (id_col, sh, n) sides —
+    each doc's distinct shingles and their count. Candidate pairs join
+    side a on a and side b on (b, sh); with ``cands=None`` the sides
+    co-occurrence-join on the shingle, keeping a < b. |A∩B| is one count
+    per pair; returns (a, b, jaccard) with jaccard ≥ ``min_jaccard``."""
+    sa = side_a.select(F.col(id_col).alias(a), "sh", F.col("n").alias("nA"))
+    sb = side_b.select(F.col(id_col).alias(b), "sh", F.col("n").alias("nB"))
+    if cands is None:
+        matched = sa.join(sb, on="sh").filter(F.col(a) < F.col(b))
+    else:
+        matched = cands.join(sa, on=a).join(sb, on=[b, "sh"])
+    common = matched.groupBy(a, b, "nA", "nB").agg(
+        F.count(F.lit(1)).alias("common")
+    )
+    jaccard = F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))
+    return common.select(a, b, jaccard.alias("jaccard")).filter(
+        F.col("jaccard") >= min_jaccard
     )
 
 
@@ -176,14 +230,15 @@ def minhash_near_dup_pairs(
 ) -> DataFrame:
     """MinHash-LSH near-dup pipeline with exact verification: candidates
     from banding, then true shingle-Jaccard computed only for candidates
-    (the verify join is bucket-local, never all-pairs).
+    — :func:`near_dup_pairs_from_index` over the index of this frame's
+    shingles.
 
-    ``max_bucket_size`` (default 2000) is the hot-bucket cap threaded into
-    :func:`lsh_candidate_pairs` — ON by default because this is the
-    production entry point and an uncapped banding join is the documented
-    quadratic risk at 100 TB (a boilerplate storm puts millions of docs in
-    one bucket → cap² = bounded ~4M pairs instead of 10¹²). Pass ``None``
-    to disable when the corpus is known clean.
+    ``max_bucket_size`` (default 2000) is the hot-bucket cap — ON by
+    default because this is the production entry point and an uncapped
+    banding join is the documented quadratic risk at 100 TB (a
+    boilerplate storm puts millions of docs in one bucket → cap² =
+    bounded ~4M pairs instead of 10¹²). Pass ``None`` to disable when
+    the corpus is known clean.
 
     The exploded shingle frame feeds three consumers (signatures, sizes,
     the verify join's two sides) — it is cached (memory-and-disk, spills
@@ -200,28 +255,10 @@ def minhash_near_dup_pairs(
     stages). Revisit only if profiling a REAL corpus shows the b-side
     shuffle dominating."""
     sh = exploded_shingles(df, text_col, id_col, shingle_n).cache()
-    sigs = _signatures_from_shingles(sh, id_col, n_perm)
-    cands = lsh_candidate_pairs(sigs, n_perm, bands, id_col, max_bucket_size)
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.join(sizes, on=id_col).select(
-        F.col(id_col).alias("idA"), F.col("sh"), F.col("n").alias("nA")
+    index = _index_from_shingles(sh, id_col, n_perm, bands)
+    return near_dup_pairs_from_index(
+        index, id_col, min_jaccard, max_bucket_size
     )
-    b = sh.join(sizes, on=id_col).select(
-        F.col(id_col).alias("idB"), F.col("sh"), F.col("n").alias("nB")
-    )
-    common = (
-        cands.join(a, on="idA")
-        .join(b, on=["idB", "sh"])
-        .groupBy("idA", "idB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return common.select(
-        "idA",
-        "idB",
-        (F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))).alias(
-            "jaccard"
-        ),
-    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def _band_buckets(
@@ -264,59 +301,38 @@ def cross_corpus_near_dup_pairs(
     reference/eval set (``benchmark_contamination`` is the exact-8-gram
     twin; this catches paraphrase-level overlap the exact scan misses).
 
-    Same banding/verify machinery as :func:`minhash_near_dup_pairs`, but
-    the bucket join is corpus × reference (never corpus × corpus), so the
+    The bucket join is corpus × reference (never corpus × corpus), so the
     fan-out is bounded by the reference side — usually tiny next to the
     training corpus. The hot-bucket cap counts BOTH sides' members per
-    bucket (an empty-doc bucket is hot regardless of which side fills it).
+    bucket (an empty-doc bucket is hot regardless of which side fills
+    it); see :func:`_small_buckets`.
 
     Returns (corpus_id, ref_id, jaccard) for verified pairs ≥ threshold.
     """
     sh_c = exploded_shingles(corpus, text_col, id_col, shingle_n).cache()
     sh_r = exploded_shingles(reference, text_col, id_col, shingle_n).cache()
-    bk_c = _band_buckets(
-        _signatures_from_shingles(sh_c, id_col, n_perm), n_perm, bands, id_col
+    bk_c, _, sz_c = _index_from_shingles(sh_c, id_col, n_perm, bands)
+    bk_r, _, sz_r = _index_from_shingles(sh_r, id_col, n_perm, bands)
+    both, cap = bk_c.unionByName(bk_r), max_bucket_size
+    cands = _bucket_pairs(
+        _small_buckets(bk_c, both, cap), id_col, "corpus_id", "ref_id",
+        bk_b=_small_buckets(bk_r, both, cap),
     )
-    bk_r = _band_buckets(
-        _signatures_from_shingles(sh_r, id_col, n_perm), n_perm, bands, id_col
+    return _jaccard_verify(
+        cands, sh_c.join(sz_c, on=id_col), sh_r.join(sz_r, on=id_col),
+        min_jaccard, id_col, "corpus_id", "ref_id",
     )
-    if max_bucket_size is not None:
-        small = (
-            bk_c.unionByName(bk_r)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bucket_n"))
-            .filter(F.col("__bucket_n") <= max_bucket_size)
-            .select("bucket")
-        )
-        bk_c = bk_c.join(small, on="bucket", how="left_semi")
-        bk_r = bk_r.join(small, on="bucket", how="left_semi")
-    cands = (
-        bk_c.select(F.col(id_col).alias("corpus_id"), "bucket")
-        .join(bk_r.select(F.col(id_col).alias("ref_id"), "bucket"), on="bucket")
-        .select("corpus_id", "ref_id")
-        .distinct()
+
+
+def _index_from_shingles(
+    sh: DataFrame, id_col: str, n_perm: int, bands: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """:func:`near_dup_index` over an already-exploded (id, sh) frame."""
+    bk = _band_buckets(
+        _signatures_from_shingles(sh, id_col, n_perm), n_perm, bands, id_col
     )
-    size_c = sh_c.groupBy(id_col).agg(F.count(F.lit(1)).alias("nA"))
-    size_r = sh_r.groupBy(id_col).agg(F.count(F.lit(1)).alias("nB"))
-    a = sh_c.join(size_c, on=id_col).select(
-        F.col(id_col).alias("corpus_id"), "sh", "nA"
-    )
-    b = sh_r.join(size_r, on=id_col).select(
-        F.col(id_col).alias("ref_id"), "sh", "nB"
-    )
-    common = (
-        cands.join(a, on="corpus_id")
-        .join(b, on=["ref_id", "sh"])
-        .groupBy("corpus_id", "ref_id", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return common.select(
-        "corpus_id",
-        "ref_id",
-        (
-            F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= min_jaccard)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
+    return bk, sh, sizes
 
 
 def near_dup_index(
@@ -344,11 +360,7 @@ def near_dup_index(
     twins; near-dup now does too.
     """
     sh = exploded_shingles(df, text_col, id_col, shingle_n)
-    bk = _band_buckets(
-        _signatures_from_shingles(sh, id_col, n_perm), n_perm, bands, id_col
-    )
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    return bk, sh, sizes
+    return _index_from_shingles(sh, id_col, n_perm, bands)
 
 
 def apply_near_dup_index_delta(
@@ -429,58 +441,24 @@ def incremental_near_dup_pairs(
     the EXISTING corpus".
 
     Scale shape: candidate generation is batch-buckets ⋈ index-buckets
-    (hash join keyed on the bucket digest; probe side is batch-scale);
-    the verify joins batch shingles against the persisted corpus
-    shingle table keyed (id, sh) — at 100 TB that table is bucketed by
-    id so the join co-locates, and the probe volume is candidate-pair ×
-    shingle, never corpus².
+    (probe side is batch-scale); the verify joins batch shingles against
+    the persisted corpus shingle table keyed (id, sh) — at 100 TB that
+    table is bucketed by id so the join co-locates, and the probe volume
+    is candidate-pair × shingle, never corpus².
 
     Returns (batch_id, corpus_id, jaccard) for verified pairs ≥
     threshold.
     """
     corpus_buckets, corpus_shingles, corpus_sizes = corpus_index
     sh_b = exploded_shingles(batch, text_col, id_col, shingle_n).cache()
-    bk_b = _band_buckets(
-        _signatures_from_shingles(sh_b, id_col, n_perm), n_perm, bands, id_col
+    bk_new, _, sz_b = _index_from_shingles(sh_b, id_col, n_perm, bands)
+    cb = _small_buckets(corpus_buckets, corpus_buckets, max_bucket_size)
+    return _jaccard_verify(
+        _bucket_pairs(bk_new, id_col, "batch_id", "corpus_id", bk_b=cb),
+        sh_b.join(sz_b, on=id_col),
+        corpus_shingles.join(corpus_sizes, on=id_col),
+        min_jaccard, id_col, "batch_id", "corpus_id",
     )
-    cb = corpus_buckets
-    if max_bucket_size is not None:
-        small = (
-            corpus_buckets.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bucket_n"))
-            .filter(F.col("__bucket_n") <= max_bucket_size)
-            .select("bucket")
-        )
-        cb = corpus_buckets.join(small, on="bucket", how="left_semi")
-    cands = (
-        bk_b.select(F.col(id_col).alias("batch_id"), "bucket")
-        .join(
-            cb.select(F.col(id_col).alias("corpus_id"), "bucket"),
-            on="bucket",
-        )
-        .select("batch_id", "corpus_id")
-        .distinct()
-    )
-    size_b = sh_b.groupBy(id_col).agg(F.count(F.lit(1)).alias("nA"))
-    a = sh_b.join(size_b, on=id_col).select(
-        F.col(id_col).alias("batch_id"), "sh", "nA"
-    )
-    b = corpus_shingles.join(corpus_sizes, on=id_col).select(
-        F.col(id_col).alias("corpus_id"), "sh", F.col("n").alias("nB")
-    )
-    common = (
-        cands.join(a, on="batch_id")
-        .join(b, on=["corpus_id", "sh"])
-        .groupBy("batch_id", "corpus_id", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return common.select(
-        "batch_id",
-        "corpus_id",
-        (
-            F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= min_jaccard)
 
 
 def simhash_signatures(
@@ -535,29 +513,15 @@ def ngram_jaccard_pairs(
     min_jaccard: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram Jaccard over all co-occurring pairs — the brute-force
-    oracle for the approximate dedup families. Co-occurrence join on the
-    shingle: quadratic only within identical shingles. The exploded shingle
-    frame is cached — it feeds sizes and both join sides (3 consumers), and
-    recomputing the tokenize/shingle expression per branch is ~70× slower
-    than the cached join (profiled at sf0.1)."""
+    oracle for the approximate dedup families: the co-occurrence form of
+    :func:`_jaccard_verify` (no candidates). The exploded shingle frame
+    is cached — it feeds sizes and both join sides (3 consumers), and
+    recomputing the tokenize/shingle expression per branch is ~70×
+    slower than the cached join (profiled at sf0.1)."""
     sh = exploded_shingles(df, text_col, id_col, shingle_n).cache()
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
     withn = sh.join(sizes, on=id_col)
-    a = withn.select(F.col(id_col).alias("idA"), "sh", F.col("n").alias("nA"))
-    b = withn.select(F.col(id_col).alias("idB"), "sh", F.col("n").alias("nB"))
-    common = (
-        a.join(b, on="sh")
-        .filter(F.col("idA") < F.col("idB"))
-        .groupBy("idA", "idB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return common.select(
-        "idA",
-        "idB",
-        (F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))).alias(
-            "jaccard"
-        ),
-    ).filter(F.col("jaccard") >= min_jaccard)
+    return _jaccard_verify(None, withn, withn, min_jaccard, id_col)
 
 
 def connected_components(
@@ -713,6 +677,11 @@ def dedup_clusters(
         id_col,
         F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
     )
+    return _with_cluster_sizes(labeled, id_col)
+
+
+def _with_cluster_sizes(labeled: DataFrame, id_col: str) -> DataFrame:
+    """(id, cluster_id, cluster_size) from an (id, cluster_id) labeling."""
     sizes = labeled.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )
@@ -801,14 +770,7 @@ def hamming_band_pairs(
     buckets = parts[0]
     for p in parts[1:]:
         buckets = buckets.unionByName(p)
-    a = buckets.select(F.col(id_col).alias("idA"), "band", "key")
-    b = buckets.select(F.col(id_col).alias("idB"), "band", "key")
-    cands = (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("idA") < F.col("idB"))
-        .select("idA", "idB")
-        .distinct()
-    )
+    cands = _bucket_pairs(buckets, id_col, key=("band", "key"))
     sa = sigs.select(F.col(id_col).alias("idA"), F.col(sig_col).alias("sA"))
     sb = sigs.select(F.col(id_col).alias("idB"), F.col(sig_col).alias("sB"))
     return (
@@ -1094,54 +1056,47 @@ def lsh_candidate_precision(
 ) -> DataFrame:
     """Index observability for the MinHash-LSH config: how much of the
     banding stage's candidate volume survives the exact-Jaccard verify —
-    the precision side of the bands/rows dial (the recall side is the
-    planted-twin recall gate in tests). Low precision means the verify
-    join is paying for pairs the banding should have rejected (too few
-    rows per band); tuning bands trades this against recall. This is
-    the number an index operator watches before re-banding a 100 TB
-    corpus, computed for the price of the dedup run itself.
+    the precision side of the bands/rows dial (the recall side is
+    :func:`lsh_pair_recall`). Low precision means the verify join is
+    paying for pairs the banding should have rejected (too few rows per
+    band); tuning bands trades this against recall. This is the number
+    an index operator watches before re-banding a 100 TB corpus,
+    computed for the price of the dedup run itself.
 
-    Returns one row: (n_candidates, n_verified, precision_r). Shares
-    the cached shingle frame across signatures, sizes, and both verify
-    sides exactly like the production pipeline; the two counts are
-    frame aggregates combined by a 1-row crossJoin (no driver
-    actions)."""
+    Returns one row: (n_candidates, n_verified, precision_r). Runs the
+    :func:`minhash_near_dup_pairs` pipeline over one cached shingle
+    frame, with the candidate pairs cached for their two consumers (the
+    count and the verify); see :func:`_count_ratio` for the row."""
     sh = exploded_shingles(df, text_col, id_col, shingle_n).cache()
-    sigs = _signatures_from_shingles(sh, id_col, n_perm)
-    cands = lsh_candidate_pairs(
-        sigs, n_perm, bands, id_col, max_bucket_size
+    bk, _, sizes = _index_from_shingles(sh, id_col, n_perm, bands)
+    cands = _bucket_pairs(
+        _small_buckets(bk, bk, max_bucket_size), id_col
     ).cache()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.join(sizes, on=id_col).select(
-        F.col(id_col).alias("idA"), F.col("sh"), F.col("n").alias("nA")
+    side = sh.join(sizes, on=id_col)
+    verified = _jaccard_verify(cands, side, side, min_jaccard, id_col)
+    # an empty candidate set wastes no verify work: precision 1.0
+    return _count_ratio(
+        cands, verified, "n_candidates", "n_verified", "precision_r"
     )
-    b = sh.join(sizes, on=id_col).select(
-        F.col(id_col).alias("idB"), F.col("sh"), F.col("n").alias("nB")
-    )
-    common = (
-        cands.join(a, on="idA")
-        .join(b, on=["idB", "sh"])
-        .groupBy("idA", "idB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    verified = common.filter(
-        F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))
-        >= min_jaccard
-    )
-    nc = cands.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-    nv = verified.agg(F.count(F.lit(1)).cast("long").alias("n_verified"))
-    # 0/0 pins to 1.0 (an empty candidate set wastes no verify work),
-    # mirroring lsh_pair_recall's convention — a monitoring metric must
-    # never be NULL.
-    return nc.crossJoin(nv).select(
-        "n_candidates",
-        "n_verified",
+
+
+def _count_ratio(
+    whole: DataFrame, part: DataFrame, n_whole: str, n_part: str, ratio: str
+) -> DataFrame:
+    """One row (n_whole, n_part, ratio): two frames' row counts and
+    round(n_part / n_whole, 6), pinned to 1.0 when ``whole`` is empty —
+    a monitoring metric must never be NULL. The counts are frame
+    aggregates combined by a 1-row crossJoin (no driver actions)."""
+    nw = whole.agg(F.count(F.lit(1)).cast("long").alias(n_whole))
+    np_ = part.agg(F.count(F.lit(1)).cast("long").alias(n_part))
+    return nw.crossJoin(np_).select(
+        n_whole,
+        n_part,
         F.when(
-            F.col("n_candidates") > 0,
-            F.round(F.col("n_verified") / F.col("n_candidates"), 6),
+            F.col(n_whole) > 0, F.round(F.col(n_part) / F.col(n_whole), 6)
         )
         .otherwise(F.lit(1.0))
-        .alias("precision_r"),
+        .alias(ratio),
     )
 
 
@@ -1157,10 +1112,11 @@ def lsh_pair_recall(
 ) -> DataFrame:
     """The RECALL side of the LSH dial, as a registered metric beside
     :func:`lsh_candidate_precision`: of all TRUE near-dup pairs (exact
-    shingle-Jaccard >= threshold over every co-occurring pair), how
-    many does the banded-and-capped pipeline surface? Together the two
-    metrics bracket the bands/rows/cap trade the way
-    `embedding_ann_recall` brackets the ANN ladder.
+    shingle-Jaccard >= threshold over every co-occurring pair, the
+    :func:`ngram_jaccard_pairs` kernel), how many does the
+    banded-and-capped pipeline (:func:`near_dup_pairs_from_index`)
+    surface? Together the two metrics bracket the bands/rows/cap trade
+    the way `embedding_ann_recall` brackets the ANN ladder.
 
     Returns one row: (n_true_pairs, n_hits, recall_r). The ground-truth
     side is the quadratic co-occurrence join — exact, and therefore the
@@ -1168,57 +1124,18 @@ def lsh_pair_recall(
     standard recall-estimation protocol, as the ANN recall row does);
     registered here at fixture scale where exact is affordable.
     Shares one cached shingle frame across ground truth, signatures,
-    and both verify sides; counts are frame aggregates (no driver
-    actions)."""
+    and both verify sides; see :func:`_count_ratio` for the row."""
     sh = exploded_shingles(df, text_col, id_col, shingle_n).cache()
-    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    a = sh.join(sizes, on=id_col).select(
-        F.col(id_col).alias("idA"), F.col("sh"), F.col("n").alias("nA")
+    index = _index_from_shingles(sh, id_col, n_perm, bands)
+    side = sh.join(index[2], on=id_col)
+    truth = _jaccard_verify(None, side, side, min_jaccard, id_col).select(
+        "idA", "idB"
     )
-    b = sh.join(sizes, on=id_col).select(
-        F.col(id_col).alias("idB"), F.col("sh"), F.col("n").alias("nB")
-    )
-    truth = (
-        a.join(b, on="sh")
-        .filter(F.col("idA") < F.col("idB"))
-        .groupBy("idA", "idB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .filter(
-            F.col("common")
-            / (F.col("nA") + F.col("nB") - F.col("common"))
-            >= min_jaccard
-        )
-        .select("idA", "idB")
-    )
-    sigs = _signatures_from_shingles(sh, id_col, n_perm)
-    cands = lsh_candidate_pairs(sigs, n_perm, bands, id_col, max_bucket_size)
-    lsh_pairs = (
-        cands.join(a, on="idA")
-        .join(b, on=["idB", "sh"])
-        .groupBy("idA", "idB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-        .filter(
-            F.col("common")
-            / (F.col("nA") + F.col("nB") - F.col("common"))
-            >= min_jaccard
-        )
-        .select("idA", "idB")
-    )
-    nt = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true_pairs"))
-    nh = (
-        truth.join(lsh_pairs, ["idA", "idB"])
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
-    )
-    return nt.crossJoin(nh).select(
-        "n_true_pairs",
-        "n_hits",
-        F.when(
-            F.col("n_true_pairs") > 0,
-            F.round(F.col("n_hits") / F.col("n_true_pairs"), 6),
-        )
-        .otherwise(F.lit(1.0))
-        .alias("recall_r"),
-    )
+    lsh_pairs = near_dup_pairs_from_index(
+        index, id_col, min_jaccard, max_bucket_size
+    ).select("idA", "idB")
+    hits = truth.join(lsh_pairs, ["idA", "idB"])
+    return _count_ratio(truth, hits, "n_true_pairs", "n_hits", "recall_r")
 
 
 def incremental_dedup_clusters(
@@ -1323,13 +1240,7 @@ def incremental_dedup_clusters(
             F.coalesce("component", F.col(id_col)).alias("cluster_id"),
         )
     )
-    full = old_re.unionByName(b_re)
-    sizes = full.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("cluster_size")
-    )
-    return full.join(sizes, on="cluster_id").select(
-        id_col, "cluster_id", "cluster_size"
-    )
+    return _with_cluster_sizes(old_re.unionByName(b_re), id_col)
 
 
 def near_dup_pairs_from_index(
@@ -1340,46 +1251,14 @@ def near_dup_pairs_from_index(
 ) -> DataFrame:
     """Within-corpus near-dup pairs computed FROM the persisted index
     relations (:func:`near_dup_index`) — no re-shingling, no re-banding:
-    the bucket self-join + exact-Jaccard verify read only (buckets,
-    shingles, sizes). Semantically identical to
-    :func:`minhash_near_dup_pairs` with the same parameters (same
-    digests, same cap rule, same threshold); exists so a pipeline that
-    already persists the index never tokenizes the corpus a second time
-    to (re)build the cluster assignment."""
+    the capped bucket self-join (:func:`_small_buckets`,
+    :func:`_bucket_pairs`) + the exact-Jaccard verify
+    (:func:`_jaccard_verify`) read only (buckets, shingles, sizes).
+    :func:`minhash_near_dup_pairs` is this function over the index of
+    its own shingles; this entry point exists so a pipeline that already
+    persists the index never tokenizes the corpus a second time to
+    (re)build the cluster assignment."""
     bk, sh, sz = corpus_index
-    b = bk
-    if max_bucket_size is not None:
-        small = (
-            bk.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .select("bucket")
-        )
-        b = bk.join(small, on="bucket", how="left_semi")
-    cands = (
-        b.select(F.col(id_col).alias("idA"), "bucket")
-        .join(b.select(F.col(id_col).alias("idB"), "bucket"), on="bucket")
-        .filter(F.col("idA") < F.col("idB"))
-        .select("idA", "idB")
-        .distinct()
-    )
-    szd = sz
-    a = sh.join(szd, on=id_col).select(
-        F.col(id_col).alias("idA"), "sh", F.col("n").alias("nA")
-    )
-    bb = sh.join(szd, on=id_col).select(
-        F.col(id_col).alias("idB"), "sh", F.col("n").alias("nB")
-    )
-    common = (
-        cands.join(a, on="idA")
-        .join(bb, on=["idB", "sh"])
-        .groupBy("idA", "idB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return common.select(
-        "idA",
-        "idB",
-        (
-            F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))
-        ).alias("jaccard"),
-    ).filter(F.col("jaccard") >= min_jaccard)
+    side = sh.join(sz, on=id_col)
+    cands = _bucket_pairs(_small_buckets(bk, bk, max_bucket_size), id_col)
+    return _jaccard_verify(cands, side, side, min_jaccard, id_col)

@@ -160,7 +160,6 @@ def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
     checkpoint_dir: str | None = None,
-    max_degree: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected graph given as a one-direction edge list, FIXED rounds,
@@ -177,56 +176,28 @@ def label_propagation(
     the distinction that matters when near-dup clusters chain through
     a few boilerplate hubs.
 
-    Returns (node, label). Scale shape: the symmetrized edge list is
-    cached and NEVER re-shuffles; each round is one join (labels onto
-    edge endpoints) + one (node, label) count + one min-by argmax —
-    all map-side-combinable aggregations keyed on the node; the label
-    frame is node-sized. Lineage truncates per round (the
-    dedup.connected_components O(k^2) lesson) via the shared
-    :func:`operators.ckpt.lineage_truncation` mechanism:
-    ``checkpoint_dir=None`` → executor-local localCheckpoint, a
-    reliable HDFS/S3 dir → fault-tolerant ``checkpoint()`` — pass it on
-    preemptible clusters (a lost executor otherwise aborts the run,
-    and this backs the single most expensive registered query,
-    embedding_semantic_communities).
-
-    ``max_degree`` (r11): a caller that can DECLARE a symmetrized
-    degree bound (a mutual-KNN graph has degree ≤ k by construction —
-    every mutual edge at a node consumes one of its k top-k slots)
-    opts into the FUSED fixed-round plan: (1) self-loop edges added
-    once replace the per-round union with the label frame, so each
-    round references ``labels`` exactly once and the whole fixed-round
-    chain stays LAZY — the plan grows linearly in ``rounds``, no
-    per-round eager checkpoint barrier, no per-round label-frame
-    materialization; (2) every round's vote frame is provably
-    ≤ (max_degree+1)·|V| rows, bounding the chain; (3) the symmetrized
-    edge list is eagerly localCheckpointed ONCE — measured ~1s faster
-    than ``.cache()`` here because the checkpoint truncates the
-    upstream (KNN-graph) lineage out of every round's plan instead of
-    inlining the cached subtree 4× (planning cost is a real driver
-    cost at scale, guide §7.3); a pre-``repartition`` on the ckpt'd
-    frame would be wasted — a checkpoint's partitioning is invisible
-    to the planner (measured: no difference), which is also why the
-    aspirational one-exchange-per-round form is not reachable under
-    AQE (the label frame re-exchanges into each round's join). Net:
-    two exchanges per round, ONE job for the whole query, ~30% faster
-    at sf0.1 than the generic path on the same input. Votes, counts
-    and tie-breaks are expression-identical to the generic path (the
-    self-loop contributes the same single own-label vote the union
-    did), so the result is bit-identical — the unrolled oracle replays
-    both shapes. ``checkpoint_dir`` is ignored in this path (the one
-    intermediate is the executor-local edge checkpoint; fault
-    tolerance comes from re-running the one query).
+    Returns (node, label). Scale shape: the closed neighborhood is
+    folded into the edge list ONCE — the symmetrized edges plus one
+    self-loop per node — so each round references ``labels`` exactly
+    once and the whole fixed-round chain stays LAZY: one join (labels
+    onto edge endpoints) + one (node, label) count + one min-by argmax
+    per round, all map-side-combinable aggregations keyed on the node,
+    the plan growing linearly in ``rounds`` with no per-round
+    materialization barrier. The self-loop casts the same single
+    own-label vote as the oracle's union with the label frame.
+    The edge list is the one materialized intermediate, truncated
+    eagerly through the shared
+    :func:`operators.ckpt.lineage_truncation`: ``checkpoint_dir=None``
+    → executor-local localCheckpoint, a reliable HDFS/S3 dir →
+    fault-tolerant ``checkpoint()`` — pass it on preemptible clusters
+    (a lost executor otherwise aborts the run). The checkpoint also
+    keeps the upstream (e.g. KNN-graph) lineage out of every round's
+    plan, which is cheaper to plan than inlining a cached subtree
+    once per round.
     """
     from bigdata_capstone_spark.operators.ckpt import lineage_truncation
 
-    # The symmetrized edge list is re-joined on ``dst`` EVERY round:
-    # repartition + sort it on that key once, before caching, so each
-    # round's sort-merge join reuses the cached partitioning AND sort
-    # order instead of re-exchanging + re-sorting the (largest) edge
-    # frame per round (r10 optimization: 2 of the 4 per-round exchanges
-    # removed; the remaining two are the node-sized label frames).
-    und_base = (
+    und = (
         edges.select("src", "dst")
         .unionByName(
             edges.select(
@@ -235,78 +206,37 @@ def label_propagation(
         )
         .distinct()
     )
-    if max_degree is not None:
-        # Bag-union the self-loops (NOT distinct): an input self-loop,
-        # if present, must keep contributing its edge vote on top of
-        # the own-label vote, exactly as the generic path's union did.
-        selfloops = und_base.select(F.col("src"), F.col("src").alias("dst"))
-        und_plus = und_base.unionByName(
-            selfloops.distinct()
-        ).localCheckpoint(eager=True)
-        labels = (
-            und_plus.select(F.col("src").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-        )
-        for _ in range(rounds):
-            closed = und_plus.join(
-                labels, und_plus["dst"] == labels["node"]
-            ).select("src", "label")
-            freq = closed.repartition("src").groupBy("src", "label").agg(
-                F.count(F.lit(1)).alias("c")
-            )
-            labels = (
-                freq.groupBy("src")
-                .agg(
-                    F.min_by(
-                        "label",
-                        F.struct(
-                            (-F.col("c")).alias("nc"),
-                            F.col("label").alias("lb"),
-                        ),
-                    ).alias("label")
-                )
-                .select(F.col("src").alias("node"), "label")
-            )
-        return labels
-    und = (
-        und_base
-        .repartition("dst")
-        .sortWithinPartitions("dst")
-        .cache()
-    )
-    labels = und.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
+    # Bag-union the self-loops (NOT distinct with the edges): an input
+    # self-loop, if present, keeps contributing its edge vote on top of
+    # the own-label vote.
+    selfloops = und.select(F.col("src"), F.col("src").alias("dst"))
     with lineage_truncation(edges.sparkSession, checkpoint_dir) as _ckpt:
-        for _ in range(rounds):
-            neigh = und.join(
-                labels, und["dst"] == labels["node"]
-            ).select("src", "label")
-            closed = neigh.unionByName(
-                labels.select(F.col("node").alias("src"), "label")
+        closed_edges = _ckpt(und.unionByName(selfloops.distinct()))
+    labels = (
+        closed_edges.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("label", F.col("node"))
+    )
+    for _ in range(rounds):
+        closed = closed_edges.join(
+            labels, closed_edges["dst"] == labels["node"]
+        ).select("src", "label")
+        freq = closed.repartition("src").groupBy("src", "label").agg(
+            F.count(F.lit(1)).alias("c")
+        )
+        labels = (
+            freq.groupBy("src")
+            .agg(
+                F.min_by(
+                    "label",
+                    F.struct(
+                        (-F.col("c")).alias("nc"),
+                        F.col("label").alias("lb"),
+                    ),
+                ).alias("label")
             )
-            # one explicit clustering by src serves BOTH aggregations:
-            # hashpartitioning(src) satisfies ClusteredDistribution for
-            # groupBy(src, label) and groupBy(src) alike, so the
-            # frequency count and the argmax run exchange-free on top
-            # of it (one shuffle per round where there were two)
-            freq = closed.repartition("src").groupBy("src", "label").agg(
-                F.count(F.lit(1)).alias("c")
-            )
-            labels = _ckpt(
-                freq.groupBy("src")
-                .agg(
-                    F.min_by(
-                        "label",
-                        F.struct(
-                            (-F.col("c")).alias("nc"),
-                            F.col("label").alias("lb"),
-                        ),
-                    ).alias("label")
-                )
-                .select(F.col("src").alias("node"), "label")
-            )
+            .select(F.col("src").alias("node"), "label")
+        )
     return labels
 
 

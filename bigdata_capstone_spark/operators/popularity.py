@@ -99,7 +99,8 @@ def grid_search_damping(
     truth are each computed ONCE and cached; per β only the damped-mean
     arithmetic, the k-item ranking, and the metric aggregation re-run —
     at 100 TB the expensive shuffles happen once, the grid loop touches
-    |items|-sized data.
+    |items|-sized data. The three caches are released once the loop has
+    collected its rows.
 
     Returns ``(best_damping, [{damping, ndcg_at_k, ...}, ...])``.
     """
@@ -113,21 +114,25 @@ def grid_search_damping(
     val_users = val.select(user_col).distinct().cache()
 
     results: list[dict] = []
-    for beta in dampings:
-        scores = stats.select(
-            item_col,
-            damped_mean(
-                F.col("rating_count"), F.col("rating_sum"), beta
-            ).alias("popularity_score"),
-        )
-        recs = recommend_top_k(val_users, scores, k, user_col, item_col)
-        preds = recs.select(
-            user_col, item_col, (F.col("rank") - 1).alias("pos")
-        )
-        row = ranking_metrics(
-            preds, truth, k, user_col, item_col, "pos"
-        ).first()
-        results.append({"damping": beta, **row.asDict()})
+    try:
+        for beta in dampings:
+            scores = stats.select(
+                item_col,
+                damped_mean(
+                    F.col("rating_count"), F.col("rating_sum"), beta
+                ).alias("popularity_score"),
+            )
+            recs = recommend_top_k(val_users, scores, k, user_col, item_col)
+            preds = recs.select(
+                user_col, item_col, (F.col("rank") - 1).alias("pos")
+            )
+            row = ranking_metrics(
+                preds, truth, k, user_col, item_col, "pos"
+            ).first()
+            results.append({"damping": beta, **row.asDict()})
+    finally:
+        for cached in (stats, truth, val_users):
+            cached.unpersist()
     best = max(results, key=lambda r: r["ndcg_at_k"])["damping"]
     return best, results
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdata_capstone_spark.operators.dedup import _jaccard_verify
 from bigdata_capstone_spark.operators.relational import top_k
 
 
@@ -100,7 +101,6 @@ def exact_jaccard_pairs(
     min_common: int = 1,
     user_col: str = "userId",
     item_col: str = "movieId",
-    cache_prepared: bool = True,
     max_item_freq: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard over all user pairs sharing ≥ ``min_common`` items.
@@ -132,18 +132,16 @@ def exact_jaccard_pairs(
     synthetic hot key is pinned by
     tests/test_r11_optimizations.py::test_exact_jaccard_hot_item_cap).
 
-    ``cache_prepared`` caches the deduped (user, item) table before the
-    self-join: it feeds the size aggregate and both join branches, otherwise
-    the full upstream lineage (scans, distinct) executes three times.
+    The deduped (user, item) table is cached before the self-join: it
+    feeds the size aggregate and both join branches, otherwise the full
+    upstream lineage (scans, distinct) executes three times.
 
     Plan shape (profiled at sf0.1, ~2× over the naive form): user sizes are
     a tiny table → ``broadcast`` them both for the min-activity filter and
     for attaching nA/nB AFTER the pair aggregation, so the wide co-occurrence
     shuffle carries only (userA, userB) and the groupBy keys stay narrow.
     """
-    ui = ratings.select(user_col, item_col).distinct()
-    if cache_prepared:
-        ui = ui.cache()
+    ui = ratings.select(user_col, item_col).distinct().cache()
     sizes = ui.groupBy(user_col).agg(F.count(F.lit(1)).alias("n"))
     active = F.broadcast(sizes.filter(F.col("n") >= min_items))
     ui_act = ui.join(active.select(user_col), on=user_col)
@@ -206,7 +204,8 @@ def exact_jaccard_pairs_prefix(
     among each side's first ``⌊(1-t)·|A|⌋ + 1`` items — so the candidate
     join runs only on those short prefixes of the RAREST items, instead
     of on every (user, item) row. Candidates are then verified with the
-    usual intersection count over the FULL sets.
+    usual intersection count over the FULL sets — the near-dup family's
+    verify kernel (:func:`operators.dedup._jaccard_verify`).
 
     Scale effect: the co-occurrence join's fan-out per item drops from
     (item frequency)² to (prefix occupancy)² — and prefix occupancy is
@@ -241,24 +240,7 @@ def exact_jaccard_pairs_prefix(
         .distinct()
     )
 
-    a = ui_sized.select(
-        F.col(user_col).alias("userA"), F.col(item_col).alias("i"),
-        F.col("n").alias("nA"),
-    )
-    b = ui_sized.select(
-        F.col(user_col).alias("userB"), F.col(item_col).alias("i"),
-        F.col("n").alias("nB"),
-    )
-    common = (
-        cands.join(a, on="userA")
-        .join(b, on=["userB", "i"])
-        .groupBy("userA", "userB", "nA", "nB")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return common.select(
-        "userA",
-        "userB",
-        (
-            F.col("common") / (F.col("nA") + F.col("nB") - F.col("common"))
-        ).alias("similarity"),
-    ).filter(F.col("similarity") >= min_similarity)
+    side = ui_sized.select(user_col, F.col(item_col).alias("sh"), "n")
+    return _jaccard_verify(
+        cands, side, side, min_similarity, user_col, "userA", "userB"
+    ).withColumnRenamed("jaccard", "similarity")

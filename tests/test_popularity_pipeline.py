@@ -168,3 +168,26 @@ def test_csv_roundtrip(spark, clean, tmp_path):
     assert back.schema == RATINGS_SCHEMA
     assert sample.exceptAll(back).count() == 0
     assert back.exceptAll(sample).count() == 0
+
+
+def test_grid_search_damping_leaves_no_cache(spark):
+    """grid_search_damping caches its item stats, ground truth and
+    validation users for the grid loop, and releases all three once the
+    loop has collected its rows: no cache entry is left behind."""
+    from bigdata_capstone_spark.operators.popularity import grid_search_damping
+
+    schema = "userId INT, movieId INT, rating DOUBLE"
+    train = spark.createDataFrame(
+        [(u, m, float((u * m) % 5 + 1)) for u in range(1, 6)
+         for m in range(1, 8)],
+        schema,
+    )
+    val = spark.createDataFrame(
+        [(1, 2, 5.0), (1, 3, 1.0), (2, 4, 4.0), (2, 5, 2.0), (3, 1, 3.0)],
+        schema,
+    )
+    spark.catalog.clearCache()
+    best, results = grid_search_damping(train, val, [1.0, 10.0], k=3)
+    assert [r["damping"] for r in results] == [1.0, 10.0]
+    assert best in (1.0, 10.0)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -20,45 +20,51 @@ def _lpa_edges(spark):
     return spark.createDataFrame(rows, "src LONG, dst LONG")
 
 
+def _lpa_oracle_labels(edge_rows, rounds):
+    """The unrolled DuckDB oracle (label_propagation_unrolled_sql) over
+    the same edge list."""
+    import duckdb
+
+    from bigdata_capstone_spark.operators.graph import (
+        label_propagation_unrolled_sql,
+    )
+
+    values = ", ".join(f"({a}, {b})" for a, b in edge_rows)
+    sql = label_propagation_unrolled_sql(
+        f"SELECT * FROM (VALUES {values}) t(src, dst)", rounds=rounds
+    )
+    return set(duckdb.connect().execute(sql).fetchall())
+
+
 def test_label_propagation_fused_matches_generic(spark):
-    """The fused fixed-round path (max_degree declared) must be
-    bit-identical to the generic eager-checkpoint path — same votes,
-    same smallest-label tie-break, every round."""
+    """The fused self-loop fixed-round plan must match the generic
+    unrolled DuckDB oracle bit for bit — same votes, same smallest-label tie-break,
+    every round."""
     from bigdata_capstone_spark.operators.graph import label_propagation
 
     edges = _lpa_edges(spark)
+    rows = [(r["src"], r["dst"]) for r in edges.collect()]
     for rounds in (1, 2, 3):
-        generic = {
+        got = {
             (r["node"], r["label"])
             for r in label_propagation(edges, rounds=rounds).collect()
         }
-        fused = {
-            (r["node"], r["label"])
-            for r in label_propagation(
-                edges, rounds=rounds, max_degree=7
-            ).collect()
-        }
-        assert fused == generic
+        assert got == _lpa_oracle_labels(rows, rounds)
 
 
 def test_label_propagation_fused_self_loop_input(spark):
     """An input self-loop must keep contributing its EDGE vote on top
-    of the own-label vote in the fused path, exactly as the generic
-    union did (the self-loop bag-union subtlety)."""
+    of the own-label vote in the fused path (the self-loop bag-union subtlety), as the
+    oracle's closed-neighborhood union counts it."""
     from bigdata_capstone_spark.operators.graph import label_propagation
 
-    edges = spark.createDataFrame(
-        [(1, 1), (1, 2), (2, 3), (3, 4)], "src LONG, dst LONG"
-    )
-    generic = {
+    rows = [(1, 1), (1, 2), (2, 3), (3, 4)]
+    edges = spark.createDataFrame(rows, "src LONG, dst LONG")
+    got = {
         (r["node"], r["label"])
         for r in label_propagation(edges, rounds=2).collect()
     }
-    fused = {
-        (r["node"], r["label"])
-        for r in label_propagation(edges, rounds=2, max_degree=4).collect()
-    }
-    assert fused == generic
+    assert got == _lpa_oracle_labels(rows, 2)
 
 
 def test_roc_auc_by_group_matches_single_group_auc(spark):
