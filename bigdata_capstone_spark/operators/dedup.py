@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdata_capstone_spark.functions.portable import md5_long, perm_md5_long
+from bigdata_capstone_spark.operators.ckpt import truncate
 from bigdata_capstone_spark.operators.relational import fan_out  # noqa: F401
 from bigdata_capstone_spark.operators.textops import tokens_col
 
@@ -529,7 +530,6 @@ def connected_components(
     a_col: str = "idA",
     b_col: str = "idB",
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list — the transitive
     closure that turns pairwise near-dup hits into dedup CLUSTERS (a
@@ -551,91 +551,75 @@ def connected_components(
 
     Scale shape per round: one join (labels ⋈ edges) + one groupBy(min) —
     both shuffle on node id, and AQE handles the skew of giant
-    components. Labels are checkpoint-truncated every round so the
-    lineage does not grow with iterations (the classic
-    iterative-algorithm failure on Spark).
-
-    ``checkpoint_dir`` selects the truncation mechanism. Default None
-    uses ``localCheckpoint`` — fine for local mode, but its blocks live
-    on executor storage, so ONE lost executor aborts the whole query
-    instead of recomputing (observed in round 5 as a TorrentBroadcast
-    store failure killing ``dedup_keep_best`` under contention). On a
-    real cluster with preemption, pass a reliable directory (HDFS/S3):
-    the per-round frames then use reliable ``checkpoint()`` — lineage
-    truncation survives executor loss at the price of a distributed-FS
-    write per round (labels are (node, component) rows — tiny relative
-    to the edge list). The mechanism is the shared
-    :func:`operators.ckpt.lineage_truncation` context manager, which
-    saves and restores the session's prior checkpoint dir
-    (``setCheckpointDir`` is session-global state — see ckpt.py for the
-    concurrency caveat).
+    components. The edge list and each round's labels are truncated
+    with :func:`operators.ckpt.truncate` so the lineage does not grow
+    with iterations (the classic iterative-algorithm failure on Spark),
+    and round 1 reads the truncated edge list, not the input pipeline.
 
     Returns (node, component) with component = min node id in the
     component. Not SQL-expressible without recursive CTEs → rows-only
     oracle; correctness is asserted against a union-find in tests.
     """
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
-
-    sym = edges.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).unionByName(
-        edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    sym = truncate(
+        edges.select(
+            F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+        ).unionByName(
+            edges.select(
+                F.col(b_col).alias("src"), F.col(a_col).alias("dst")
+            )
+        )
     )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.withColumn("component", F.col("node"))
     comp_type = dict(labels.dtypes)["component"]
-    with lineage_truncation(edges.sparkSession, checkpoint_dir) as _ckpt:
-        sym = _ckpt(sym)
-        for _ in range(max_iter):
-            # candidate labels flowing along edges: neighbor's current label
-            neighbor_labels = (
-                sym.join(labels, on=F.col("dst") == F.col("node"))
-                .select(F.col("src").alias("node"), "component")
+    for _ in range(max_iter):
+        # candidate labels flowing along edges: neighbor's current label
+        neighbor_labels = (
+            sym.join(labels, on=F.col("dst") == F.col("node"))
+            .select(F.col("src").alias("node"), "component")
+        )
+        # Fold the convergence signal INTO the label aggregate: the self
+        # row carries its current label as `old` (max() ignores the nulls
+        # on neighbor rows), so after the groupBy each node knows both its
+        # new and previous label. The changed-check is then a narrow scan
+        # of the just-checkpointed partitions with a limit-1 early exit —
+        # no second join job per round (previously: labels⋈new_labels +
+        # count, a full extra shuffle per iteration).
+        merged = labels.select(
+            "node", "component", F.col("component").alias("old")
+        ).unionByName(
+            neighbor_labels.withColumn("old", F.lit(None).cast(comp_type))
+        )
+        propagated = merged.groupBy("node").agg(
+            F.min("component").alias("component"),
+            F.max("old").alias("old"),
+        )
+        # pointer jump: follow my label to ITS label (labels are node ids,
+        # so the lookup table is `propagated` itself keyed by node). The
+        # left join misses only when my label is already a component root
+        # whose own row carries the same id — coalesce keeps it.
+        lut = propagated.select(
+            F.col("node").alias("component"),
+            F.col("component").alias("component2"),
+        )
+        new_labels = truncate(
+            propagated.join(lut, on="component", how="left").select(
+                "node",
+                F.least(
+                    F.col("component"),
+                    F.coalesce(F.col("component2"), F.col("component")),
+                ).alias("component"),
+                "old",
             )
-            # Fold the convergence signal INTO the label aggregate: the self
-            # row carries its current label as `old` (max() ignores the nulls
-            # on neighbor rows), so after the groupBy each node knows both its
-            # new and previous label. The changed-check is then a narrow scan
-            # of the just-checkpointed partitions with a limit-1 early exit —
-            # no second join job per round (previously: labels⋈new_labels +
-            # count, a full extra shuffle per iteration).
-            merged = labels.select(
-                "node", "component", F.col("component").alias("old")
-            ).unionByName(
-                neighbor_labels.withColumn("old", F.lit(None).cast(comp_type))
-            )
-            propagated = merged.groupBy("node").agg(
-                F.min("component").alias("component"),
-                F.max("old").alias("old"),
-            )
-            # pointer jump: follow my label to ITS label (labels are node ids,
-            # so the lookup table is `propagated` itself keyed by node). The
-            # left join misses only when my label is already a component root
-            # whose own row carries the same id — coalesce keeps it.
-            lut = propagated.select(
-                F.col("node").alias("component"),
-                F.col("component").alias("component2"),
-            )
-            new_labels = (
-                propagated.join(lut, on="component", how="left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("component2"), F.col("component")),
-                    ).alias("component"),
-                    "old",
-                )
-            )
-            new_labels = _ckpt(new_labels)
-            changed = (
-                new_labels.filter(F.col("component") != F.col("old"))
-                .limit(1)
-                .count()
-            )
-            labels = new_labels.drop("old")
-            if changed == 0:
-                break
+        )
+        changed = (
+            new_labels.filter(F.col("component") != F.col("old"))
+            .limit(1)
+            .count()
+        )
+        labels = new_labels.drop("old")
+        if changed == 0:
+            break
     return labels
 
 
@@ -649,7 +633,6 @@ def dedup_clusters(
     min_jaccard: float = 0.5,
     max_iter: int = 20,
     max_bucket_size: int | None = 2000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Near-dup clusters: minhash-LSH pairs → connected components →
     (doc_id, cluster_id, cluster_size). Docs with no near-dup partner get
@@ -659,16 +642,13 @@ def dedup_clusters(
     ``max_bucket_size`` is the hot-bucket cap (ON by default, see
     :func:`minhash_near_dup_pairs`); the component closure recovers
     top-of-cluster links a capped bucket drops, as long as some chain of
-    under-cap buckets connects them. ``checkpoint_dir`` enables reliable
-    checkpointing in the iterative closure (see
-    :func:`connected_components`) — set it on clusters with preemption."""
+    under-cap buckets connects them."""
     pairs = minhash_near_dup_pairs(
         df, text_col, id_col, n_perm, bands, shingle_n, min_jaccard,
         max_bucket_size,
     )
     comp = connected_components(
-        pairs.select("idA", "idB"), "idA", "idB", max_iter,
-        checkpoint_dir=checkpoint_dir,
+        pairs.select("idA", "idB"), "idA", "idB", max_iter
     )
     all_docs = df.select(F.col(id_col))
     labeled = all_docs.join(
@@ -1150,7 +1130,6 @@ def incremental_dedup_clusters(
     min_jaccard: float = 0.7,
     max_bucket_size: int | None = 2000,
     max_iter: int = 20,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """O(batch + affected) maintenance of a persisted NEAR-DUP CLUSTER
     assignment (r9) — the transitive-closure family's incremental twin,
@@ -1218,10 +1197,7 @@ def incremental_dedup_clusters(
         .alias("idB"),
     )
     edges = cross_c.unionByName(internal.select("idA", "idB")).distinct()
-    labels = connected_components(
-        edges, "idA", "idB", max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-    )
+    labels = connected_components(edges, "idA", "idB", max_iter=max_iter)
     cmap = labels.select(
         F.col("node").alias("cluster_id"), F.col("component").alias("__new")
     )

@@ -15,15 +15,17 @@ partitioned partial aggregation and DuckDB's serial scan.
 
 Scale: each iteration is one shuffle (groupBy dst). Edges and degrees
 are computed once and cached; the rank frame stays (node, rank) — the
-graph itself never re-shuffles. For long runs, localCheckpoint every few
-rounds (see dedup.connected_components for why); at 3 rounds lineage
-stays shallow.
+graph itself never re-shuffles. Each round's frame is truncated with
+:func:`operators.ckpt.truncate`, so round k never re-executes rounds
+1..k-1; the edge caches are released before the operator returns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bigdata_capstone_spark.operators.ckpt import truncate
 
 
 def out_degrees(edges: DataFrame) -> DataFrame:
@@ -35,8 +37,6 @@ def pagerank(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    broadcast_nodes: bool | None = None,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """PageRank over a directed edge list (src, dst), fixed rounds.
 
@@ -46,40 +46,30 @@ def pagerank(
 
     Physical strategy: the node-sized frames (degrees, ranks) are tiny
     relative to edges — one row per node. When they fit a broadcast
-    (``broadcast_nodes``, auto-on below 2M nodes), each round is a
-    map-only pass over the cached, never-reshuffled edge list plus ONE
-    shuffle whose input is already combined map-side to ≤ partitions ×
-    |dst| rows. Checkpointed rank frames carry no catalyst size stats,
-    so without the explicit hint the planner would fall back to
-    sort-merge-joining the edge list every round — full-width exchanges
-    of the biggest frame, 3× over. Beyond broadcast size, the shuffle
+    (at most 2M nodes), each round is a map-only pass over the cached,
+    never-reshuffled edge list plus ONE shuffle whose input is already
+    combined map-side to ≤ partitions × |dst| rows. Checkpointed rank
+    frames carry no catalyst size stats, so without the explicit hint
+    the planner would fall back to sort-merge-joining the edge list
+    every round — full-width exchanges of the biggest frame, 3× over. Beyond broadcast size, the shuffle
     join is the honest cost: rank vectors of 1e9 nodes don't fit an
     executor, and each round pays an edges⋈ranks exchange (bucketing
     edges by src would remove even that in a persisted-table setting).
-
-    ``checkpoint_dir``: same contract as dedup.connected_components —
-    None truncates lineage per round with executor-local
-    ``localCheckpoint`` (non-fault-tolerant: one lost executor aborts
-    the run); a reliable HDFS/S3 directory switches to ``checkpoint()``
-    so the run survives preemption. Shared mechanism
-    :func:`operators.ckpt.lineage_truncation` (saves/restores the
-    session checkpoint dir).
     """
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
-
     edges = edges.select("src", "dst").cache()
-    deg = out_degrees(edges)
-    n = deg.count()  # scalar: node count (every node has out-edges)
-    base = (1.0 - damping) / n
-    if broadcast_nodes is None:
-        broadcast_nodes = n <= 2_000_000
-    hint = F.broadcast if broadcast_nodes else (lambda df: df)
+    edges_wd = None
+    try:
+        deg = out_degrees(edges)
+        n = deg.count()  # scalar: node count (every node has out-edges)
+        base = (1.0 - damping) / n
+        hint = F.broadcast if n <= 2_000_000 else (lambda df: df)
 
-    # Pre-divide by out-degree once: (src, dst, outdeg) never changes.
-    edges_wd = edges.join(hint(deg), "src").cache()
+        # Pre-divide by out-degree once: (src, dst, outdeg) never changes.
+        edges_wd = edges.join(hint(deg), "src").cache()
 
-    ranks = deg.select(F.col("src").alias("node"), F.lit(1.0 / n).alias("rank"))
-    with lineage_truncation(edges.sparkSession, checkpoint_dir) as _ckpt:
+        ranks = deg.select(
+            F.col("src").alias("node"), F.lit(1.0 / n).alias("rank")
+        )
         for _ in range(iterations):
             contrib = edges_wd.join(
                 hint(ranks), F.col("node") == F.col("src")
@@ -98,8 +88,12 @@ def pagerank(
             # Eagerly truncate lineage: without this, round k re-executes
             # rounds 1..k-1 (same pathology as dedup.connected_components)
             # — total work O(k²) joins instead of O(k).
-            ranks = _ckpt(ranks)
-    return ranks
+            ranks = truncate(ranks)
+        return ranks
+    finally:
+        edges.unpersist()
+        if edges_wd is not None:
+            edges_wd.unpersist()
 
 
 def pagerank_unrolled_sql(
@@ -159,7 +153,6 @@ def ring_of_cliques(
 def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) over an
     undirected graph given as a one-direction edge list, FIXED rounds,
@@ -186,17 +179,11 @@ def label_propagation(
     materialization barrier. The self-loop casts the same single
     own-label vote as the oracle's union with the label frame.
     The edge list is the one materialized intermediate, truncated
-    eagerly through the shared
-    :func:`operators.ckpt.lineage_truncation`: ``checkpoint_dir=None``
-    → executor-local localCheckpoint, a reliable HDFS/S3 dir →
-    fault-tolerant ``checkpoint()`` — pass it on preemptible clusters
-    (a lost executor otherwise aborts the run). The checkpoint also
-    keeps the upstream (e.g. KNN-graph) lineage out of every round's
-    plan, which is cheaper to plan than inlining a cached subtree
-    once per round.
+    eagerly with :func:`operators.ckpt.truncate`. The checkpoint keeps
+    the upstream (e.g. KNN-graph) lineage out of every round's plan,
+    which is cheaper to plan than inlining a cached subtree once per
+    round.
     """
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
-
     und = (
         edges.select("src", "dst")
         .unionByName(
@@ -210,8 +197,7 @@ def label_propagation(
     # self-loop, if present, keeps contributing its edge vote on top of
     # the own-label vote.
     selfloops = und.select(F.col("src"), F.col("src").alias("dst"))
-    with lineage_truncation(edges.sparkSession, checkpoint_dir) as _ckpt:
-        closed_edges = _ckpt(und.unionByName(selfloops.distinct()))
+    closed_edges = truncate(und.unionByName(selfloops.distinct()))
     labels = (
         closed_edges.select(F.col("src").alias("node"))
         .distinct()
@@ -285,7 +271,6 @@ def label_propagation_unrolled_sql(
 def hits(
     edges: DataFrame,
     iterations: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999, "Authoritative sources in a hyperlinked
     environment") over a directed edge list (src, dst), FIXED rounds,
@@ -313,12 +298,8 @@ def hits(
     half-round is one edges⋈scores join plus one groupBy on the
     receiving endpoint (map-side combined, node-sized output) plus a
     1-row total. The score frames stay (node, value). Lineage truncates
-    per round via the shared :func:`operators.ckpt.lineage_truncation`
-    (``checkpoint_dir=None`` → localCheckpoint; reliable dir →
-    fault-tolerant ``checkpoint()`` for preemptible clusters).
+    per round with :func:`operators.ckpt.truncate`.
     """
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
-
     edges = edges.select("src", "dst").cache()
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -344,7 +325,7 @@ def hits(
 
     hub = nodes.withColumn("hub", F.lit(1.0))
     auth = nodes.withColumn("auth", F.lit(0.0))
-    with lineage_truncation(edges.sparkSession, checkpoint_dir) as _ckpt:
+    try:
         for _ in range(iterations):
             auth_raw = (
                 edges.join(hub, edges["src"] == hub["node"])
@@ -356,7 +337,7 @@ def hits(
                 )
                 .select(F.col("dst").alias("node"), "auth")
             )
-            auth = _ckpt(_normalize(auth_raw, "auth"))
+            auth = truncate(_normalize(auth_raw, "auth"))
             hub_raw = (
                 edges.join(auth, edges["dst"] == auth["node"])
                 .groupBy("src")
@@ -367,8 +348,11 @@ def hits(
                 )
                 .select(F.col("src").alias("node"), "hub")
             )
-            hub = _ckpt(_normalize(hub_raw, "hub"))
-    return hub.join(auth, "node")
+            hub = truncate(_normalize(hub_raw, "hub"))
+        return hub.join(auth, "node")
+    finally:
+        edges.unpersist()
+        nodes.unpersist()
 
 
 def hits_unrolled_sql(edges_cte: str, iterations: int = 3) -> str:
@@ -425,7 +409,6 @@ def bfs_depths(
     edges: DataFrame,
     seeds: DataFrame,
     rounds: int = 3,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Minimum-hop distance from a seed set over a directed edge list,
     FIXED rounds of frontier relaxation — the crawl-depth computation
@@ -447,15 +430,13 @@ def bfs_depths(
     delta-frontier BFS: at k ≤ a handful of rounds the full join is one
     shuffle per round and needs no visited-set bookkeeping; a
     1000-round traversal would want the delta-frontier variant instead.
-    Lineage truncates per round (shared lineage_truncation contract).
+    Lineage truncates per round with :func:`operators.ckpt.truncate`.
     """
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
-
     edges = edges.select("src", "dst").cache()
     depths = seeds.select("node").distinct().withColumn(
         "depth", F.lit(0)
     )
-    with lineage_truncation(edges.sparkSession, checkpoint_dir) as _ckpt:
+    try:
         for _ in range(rounds):
             relaxed = (
                 edges.join(depths, edges["src"] == depths["node"])
@@ -464,12 +445,14 @@ def bfs_depths(
                     (F.col("depth") + F.lit(1)).alias("depth"),
                 )
             )
-            depths = _ckpt(
+            depths = truncate(
                 depths.unionByName(relaxed)
                 .groupBy("node")
                 .agg(F.min("depth").alias("depth"))
             )
-    return depths
+        return depths
+    finally:
+        edges.unpersist()
 
 
 def bfs_depths_unrolled_sql(

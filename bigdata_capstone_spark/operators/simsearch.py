@@ -33,6 +33,7 @@ from bigdata_capstone_spark.functions.portable import (
     cosine_similarity_col,
     dot_product_col,
 )
+from bigdata_capstone_spark.operators.ckpt import truncate
 from bigdata_capstone_spark.operators.dedup import fan_out
 from bigdata_capstone_spark.operators.relational import (
     grouped_top_k,
@@ -1571,7 +1572,6 @@ def nn_descent(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int | None = 2000,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """NN-DESCENT refinement of the LSH-seeded corpus KNN graph (Dong,
     Moses & Li, WWW'11) — the graph-ANN family the ladder (LSH / IVF /
@@ -1599,12 +1599,12 @@ def nn_descent(
     |V|² — shuffled on node ids; the exact re-rank joins the (id, vec,
     norm) projection by id (at 100 TB both sides bucket by id); the
     per-src top-k is a key-partitioned window. Per-round lineage is
-    checkpoint-truncated via the shared ckpt mechanism (the Viterbi/LPA
+    truncated with :func:`operators.ckpt.truncate` (the Viterbi/LPA
     lesson: cache alone nests the plan ``rounds`` levels deep).
     """
     return nn_descent_trajectory(
         corpus, dim, k, rounds, n_planes, n_tables, id_col, vec_col,
-        max_bucket, checkpoint_dir,
+        max_bucket,
     )[-1]
 
 
@@ -1618,16 +1618,12 @@ def nn_descent_trajectory(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_bucket: int | None = 2000,
-    checkpoint_dir: str | None = None,
 ) -> list[DataFrame]:
     """The full refinement trajectory [seed, round1, ..., roundN] of
     :func:`nn_descent` — each element checkpoint-truncated, so
     convergence observability (per-round changed-edge counts, the
     operational signal for 'one more round or stop') can diff
     consecutive states without re-executing the chain."""
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
-
-    spark = corpus.sparkSession
     # cached across rounds (r8 verdict Wrong #3 triage): every round's
     # exact re-rank joins BOTH (id, vec, norm) projections — uncached,
     # each round re-reads the corpus and recomputes the norms twice.
@@ -1641,57 +1637,55 @@ def nn_descent_trajectory(
         F.col("sv").alias("dv"),
         F.col("sn").alias("dn"),
     )
-    g = knn_graph(
+    g = truncate(knn_graph(
         corpus, dim, k, n_planes, n_tables, id_col, vec_col, max_bucket
-    )
-    with lineage_truncation(spark, checkpoint_dir) as ckpt:
-        g = ckpt(g)
-        states = [g]
-        for _ in range(rounds):
-            und = (
-                g.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-                .unionByName(
-                    g.select(
-                        F.col("dst").alias("a"), F.col("src").alias("b")
-                    )
-                )
-                .distinct()
-            )
-            non = (
-                und.alias("x")
-                .join(
-                    und.alias("y"),
-                    (F.col("x.b") == F.col("y.a"))
-                    & (F.col("y.b") != F.col("x.a")),
-                )
-                .select(
-                    F.col("x.a").alias("src"), F.col("y.b").alias("dst")
+    ))
+    states = [g]
+    for _ in range(rounds):
+        und = (
+            g.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            .unionByName(
+                g.select(
+                    F.col("dst").alias("a"), F.col("src").alias("b")
                 )
             )
-            cand = non.unionByName(g.select("src", "dst")).distinct()
-            scored = (
-                cand.join(vs, on="src")
-                .join(vd, on="dst")
-                .select(
-                    "src",
-                    "dst",
-                    F.round(
-                        dot_product_col(F.col("sv"), F.col("dv"))
-                        / (F.col("sn") * F.col("dn")),
-                        6,
-                    ).alias("cosine_r"),
-                )
+            .distinct()
+        )
+        non = (
+            und.alias("x")
+            .join(
+                und.alias("y"),
+                (F.col("x.b") == F.col("y.a"))
+                & (F.col("y.b") != F.col("x.a")),
             )
-            g = ckpt(
-                grouped_top_k(
-                    scored,
-                    ["src"],
-                    [F.desc("cosine_r"), F.col("dst")],
-                    k,
-                    rank_col="rank",
-                ).withColumn("rank", F.col("rank").cast("int"))
+            .select(
+                F.col("x.a").alias("src"), F.col("y.b").alias("dst")
             )
-            states.append(g)
+        )
+        cand = non.unionByName(g.select("src", "dst")).distinct()
+        scored = (
+            cand.join(vs, on="src")
+            .join(vd, on="dst")
+            .select(
+                "src",
+                "dst",
+                F.round(
+                    dot_product_col(F.col("sv"), F.col("dv"))
+                    / (F.col("sn") * F.col("dn")),
+                    6,
+                ).alias("cosine_r"),
+            )
+        )
+        g = truncate(
+            grouped_top_k(
+                scored,
+                ["src"],
+                [F.desc("cosine_r"), F.col("dst")],
+                k,
+                rank_col="rank",
+            ).withColumn("rank", F.col("rank").cast("int"))
+        )
+        states.append(g)
     # every returned state is EAGERLY checkpoint-truncated, so nothing
     # downstream can re-read the cached projections — release them
     # here instead of leaking a corpus-sized cache entry per call

@@ -14,9 +14,7 @@ Differences from the reference (deliberate):
 - no ``coalesce(1)`` CSV sink / HDFS rename side-effects (S2/S3) — callers
   persist with ``sources.sinks``;
 - the ≥5-ratings filter uses a semi-join instead of inner-join-on-distinct
-  (Q5): same result, no payload materialization of the count table;
-- the four uncached ``count()`` actions (SURVEY §4.2-4) become one cached
-  lineage when ``materialize=True``.
+  (Q5): same result, no payload materialization of the count table.
 
 ``randomSplit`` is per-partition seeded sampling — deterministic for a
 fixed (seed, partitioning) but not SQL-expressible, so correctness is
@@ -72,25 +70,6 @@ def split_ratings(
         "val": val_keep,
         "test": test_keep,
     }
-
-
-def split_invariants(
-    splits: dict[str, DataFrame],
-    user_col: str = "userId",
-    item_col: str = "movieId",
-) -> dict[str, int | float]:
-    """Cheap invariant report used by tests and the rows-only driver check:
-    sizes, row-level overlap between val/test (must be 0), and how many
-    val/test item ids leak back into train exclusively via fold-back."""
-    train, val, test = splits["train"], splits["val"], splits["test"]
-    tr = train.cache()
-    sizes = {
-        "train_rows": tr.count(),
-        "val_rows": val.count(),
-        "test_rows": test.count(),
-    }
-    overlap = val.intersect(test).count()
-    return {**sizes, "val_test_row_overlap": overlap}
 
 
 def split_ratings_prf(

@@ -1054,7 +1054,6 @@ def viterbi_segment_words(
     vocab: DataFrame,
     max_piece_len: int = 4,
     max_word_len: int = 8,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Max-likelihood segmentation of each word under the unigram piece
     vocabulary — Viterbi as a SINGLE-PASS bounded dynamic program: one
@@ -1078,14 +1077,12 @@ def viterbi_segment_words(
     score_micro BIGINT). Words longer than ``max_word_len`` are not
     segmented (absent from the output — raise the cap for real
     corpora; each extra position widens the per-row fold, never adds a
-    pass). ``checkpoint_dir`` is retained for API compatibility; the
-    single-pass form has no iterative lineage to truncate.
+    pass).
 
     Scale shape: segmentation runs on DISTINCT words, the vocabulary
     broadcast is inventory-bounded, and the per-word state (the edge
     map + DP array) is O(max_word_len * max_piece_len) — corpus size
     only changes the row count of the one hash aggregation."""
-    del checkpoint_dir  # single-pass: nothing iterative to truncate
     K = max_piece_len + 1  # (start, plen) -> start*K + plen key packing
     v = vocab.select(
         "piece", F.length("piece").alias("plen"), "score_micro"

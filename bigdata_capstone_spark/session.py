@@ -13,12 +13,22 @@ are not over-parallelized.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 _PACKAGE_PARENT = os.path.dirname(
     os.path.dirname(os.path.abspath(__file__))
 )
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """Driver heap for a host whose ``/proc/meminfo`` text is ``meminfo``:
+    half of ``MemTotal`` in whole GiB, at least 1g. In local mode the
+    driver JVM hosts every executor thread, and a heap sized past the
+    host's memory gets the JVM killed part-way through a long session."""
+    kib = int(re.search(r"^MemTotal:\s+(\d+) kB", meminfo, re.M).group(1))
+    return f"{max(1, kib // (2 * 1024 * 1024))}g"
 
 
 def build_session(
@@ -31,7 +41,8 @@ def build_session(
     Local default: ``local[$SPARK_GRAFT_CPUS]`` (falls back to ``local[*]``)
     with shuffle partitions = core count. On a real cluster, pass
     ``master=None`` with a pre-configured environment and only the SQL-level
-    configs below apply.
+    configs below apply. Driver heap: ``$SPARK_DRIVER_MEM``, else
+    :func:`default_driver_memory` of this host.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -39,6 +50,10 @@ def build_session(
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM")
+    if driver_mem is None:
+        with open("/proc/meminfo") as f:
+            driver_mem = default_driver_memory(f.read())
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -59,9 +74,9 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # local mode: the driver JVM hosts all executor threads — size it
-        # for the thread count, not like a cluster driver (8g for 32
-        # threads thrashes GC under shuffle-heavy self-joins)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        # for the host, not like a cluster driver (8g for 32 threads
+        # thrashes GC under shuffle-heavy self-joins)
+        .config("spark.driver.memory", driver_mem)
         # ContextCleaner runs off GC; a big mostly-idle heap can defer GC
         # for many minutes, piling up dead shuffle/broadcast state that
         # slows later queries in long sessions. Default is 30min.

@@ -43,3 +43,22 @@ def test_out_degrees(spark):
     edges = _sym_edges(spark, [("a", "b"), ("a", "c")])
     degs = {r.src: r.outdeg for r in out_degrees(edges).collect()}
     assert degs == {"a": 2, "b": 1, "c": 1}
+
+
+def test_graph_entries_release_their_caches(spark, sf_small):
+    """Every frame the graph operators return is eagerly truncated, so
+    the edge and node caches they build are released before they
+    return: the registry entries on them leave the CacheManager empty."""
+    from bigdata_capstone_spark.catalog import QUERIES
+
+    spark.catalog.clearCache()
+    for name in (
+        "domain_pagerank",
+        "purchase_graph_pagerank",
+        "domain_hits",
+        "crawl_depth_from_seeds",
+        "domain_components",
+        "graph_label_propagation",
+    ):
+        assert QUERIES[name](spark, sf_small).collect(), name
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -14,30 +14,28 @@ from pyspark.sql import functions as F
 from bigdata_capstone_spark.sources.tables import load_table
 
 
-def test_dedup_clusters_reliable_checkpoint(spark, sf_small, tmp_path):
-    """`dedup_clusters(checkpoint_dir=...)` must route the iterative
-    closure through reliable `checkpoint()` (files actually land in the
-    directory) and produce the IDENTICAL clustering as the
-    localCheckpoint default — the mechanism changes, the fixpoint
-    doesn't."""
+def test_dedup_clusters_reliable_checkpoint(spark, sf_small, request):
+    """On a session with a checkpoint dir, `dedup_clusters` must route
+    the iterative closure through reliable `checkpoint()` (files
+    actually land in the directory) and produce the IDENTICAL
+    clustering as the localCheckpoint default — the mechanism changes,
+    the fixpoint doesn't."""
     from bigdata_capstone_spark.operators.dedup import dedup_clusters
 
     docs = load_table(spark, sf_small, "documents").select("doc_id", "text")
-    ckpt = str(tmp_path / "ckpt")
     local = {
         (r["doc_id"], r["cluster_id"], r["cluster_size"])
         for r in dedup_clusters(docs, min_jaccard=0.35).collect()
     }
+    ckpt = request.getfixturevalue("session_checkpoint_dir")
     reliable = {
         (r["doc_id"], r["cluster_id"], r["cluster_size"])
-        for r in dedup_clusters(
-            docs, min_jaccard=0.35, checkpoint_dir=ckpt
-        ).collect()
+        for r in dedup_clusters(docs, min_jaccard=0.35).collect()
     }
     assert reliable == local
     assert local, "fixture corpus should produce clusters"
-    # reliable checkpoint really wrote to the provided directory
-    ckpt_files = list((tmp_path / "ckpt").rglob("*"))
+    # reliable checkpoint really wrote to the session's directory
+    ckpt_files = list(ckpt.rglob("*"))
     assert ckpt_files, "checkpoint dir should contain RDD checkpoint data"
 
 
@@ -146,7 +144,9 @@ def test_png_unsupported_variants_raise():
         )
 
 
-def test_connected_components_checkpoint_dir_chain(spark, tmp_path):
+def test_connected_components_checkpoint_dir_chain(
+    spark, session_checkpoint_dir
+):
     """A long chain graph (propagation distance >> 1) converges to one
     component under the reliable-checkpoint path — exercising multiple
     checkpointed rounds, not just the trivial first iteration."""
@@ -156,11 +156,10 @@ def test_connected_components_checkpoint_dir_chain(spark, tmp_path):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], ["idA", "idB"]
     )
-    comp = connected_components(
-        edges, checkpoint_dir=str(tmp_path / "cc")
-    ).collect()
+    comp = connected_components(edges).collect()
     assert len(comp) == n + 1
     assert {r["component"] for r in comp} == {0}
+    assert list(session_checkpoint_dir.rglob("*"))
 
 
 def test_excise_repeated_spans_planted_boilerplate(spark):

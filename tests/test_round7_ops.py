@@ -1,11 +1,11 @@
 """Round-7 operator tests: reliable checkpointing for the iterative
-graph family, checkpoint-dir save/restore, robots wildcard rules, HTML
-entity decoding, incremental near-dup batch dedup, main-content
-extraction, 4:2:0 JPEG decode.
+graph family, an unchanged session checkpoint dir, robots wildcard
+rules, HTML entity decoding, incremental near-dup batch dedup,
+main-content extraction, 4:2:0 JPEG decode.
 
 The catalog entries get their value check from the DuckDB oracle via
 the driver contract; these tests cover the semantics the oracle can't
-see (mechanism equivalence, session-global state restoration,
+see (mechanism equivalence, session-global state left alone,
 batch-split independence).
 """
 
@@ -14,38 +14,36 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def test_label_propagation_reliable_checkpoint(spark, tmp_path):
-    """`label_propagation(checkpoint_dir=...)` must route per-round
-    lineage truncation through reliable `checkpoint()` (files land in
-    the directory) and produce IDENTICAL labels as the localCheckpoint
-    default — mechanism changes, fixpoint doesn't (the
-    dedup_clusters equivalence contract extended to graph.py)."""
+def test_label_propagation_reliable_checkpoint(spark, request):
+    """On a session with a checkpoint dir, `label_propagation` must
+    truncate lineage through reliable `checkpoint()` (files land in the
+    directory) and produce IDENTICAL labels as the localCheckpoint
+    default — mechanism changes, fixpoint doesn't (the dedup_clusters
+    equivalence contract extended to graph.py)."""
     from bigdata_capstone_spark.operators.graph import (
         label_propagation,
         ring_of_cliques,
     )
 
     edges = ring_of_cliques(spark, n_cliques=4, size=8)
-    ckpt = str(tmp_path / "lpa_ckpt")
     local = {
         (r["node"], r["label"])
         for r in label_propagation(edges, rounds=3).collect()
     }
+    ckpt = request.getfixturevalue("session_checkpoint_dir")
     reliable = {
         (r["node"], r["label"])
-        for r in label_propagation(
-            edges, rounds=3, checkpoint_dir=ckpt
-        ).collect()
+        for r in label_propagation(edges, rounds=3).collect()
     }
     assert reliable == local
     # 4 cliques → 4 communities on this fixture
     assert len({lb for _, lb in local}) == 4
-    assert list((tmp_path / "lpa_ckpt").rglob("*")), (
+    assert list(ckpt.rglob("*")), (
         "reliable checkpoint should write RDD data into the directory"
     )
 
 
-def test_pagerank_reliable_checkpoint(spark, tmp_path):
+def test_pagerank_reliable_checkpoint(spark, request):
     """Same mechanism-equivalence contract for pagerank: ranks under
     reliable checkpointing are bit-identical to the localCheckpoint
     default (the per-round arithmetic is DECIMAL-exact, so equality is
@@ -56,41 +54,57 @@ def test_pagerank_reliable_checkpoint(spark, tmp_path):
     )
 
     edges = ring_of_cliques(spark, n_cliques=3, size=6)
-    ckpt = str(tmp_path / "pr_ckpt")
     local = {
         (r["node"], r["rank"]) for r in pagerank(edges, iterations=3).collect()
     }
+    ckpt = request.getfixturevalue("session_checkpoint_dir")
     reliable = {
-        (r["node"], r["rank"])
-        for r in pagerank(edges, iterations=3, checkpoint_dir=ckpt).collect()
+        (r["node"], r["rank"]) for r in pagerank(edges, iterations=3).collect()
     }
     assert reliable == local
-    assert list((tmp_path / "pr_ckpt").rglob("*"))
+    assert list(ckpt.rglob("*"))
 
 
-def test_lineage_truncation_restores_prior_checkpoint_dir(spark, tmp_path):
-    """setCheckpointDir is SESSION-global state: lineage_truncation must
-    restore the previously-set directory on exit so a later reliable
-    checkpoint elsewhere in the session does not silently write into an
-    operator's private directory (ADVICE r6)."""
-    from bigdata_capstone_spark.operators.ckpt import lineage_truncation
+def test_iterative_operators_leave_checkpoint_dir_unchanged(spark, request):
+    """The session's checkpoint dir is deployment state: every iterative
+    operator reads it to pick the truncation mechanism and never sets,
+    changes or clears it — whether it is unset or set."""
+    from bigdata_capstone_spark.operators.dedup import connected_components
+    from bigdata_capstone_spark.operators.graph import (
+        bfs_depths,
+        hits,
+        label_propagation,
+        pagerank,
+        ring_of_cliques,
+    )
+    from bigdata_capstone_spark.operators.simsearch import (
+        nn_descent_trajectory,
+    )
 
     sc = spark.sparkContext
-    prior = str(tmp_path / "session_ckpt")
-    sc.setCheckpointDir(prior)
-    inner = str(tmp_path / "operator_ckpt")
-    df = spark.range(5)
-    with lineage_truncation(spark, inner) as ckpt:
-        out = ckpt(df)
-        assert out.count() == 5
-        # Spark appends a session UUID component under the set dir
-        assert "operator_ckpt" in sc.getCheckpointDir()
-    restored = sc.getCheckpointDir()
-    assert restored is not None and "session_ckpt" in restored
-    # None → localCheckpoint path leaves the session dir untouched
-    with lineage_truncation(spark, None) as ckpt:
-        assert ckpt(df).count() == 5
-    assert "session_ckpt" in sc.getCheckpointDir()
+    edges = ring_of_cliques(spark, n_cliques=2, size=4)
+    seeds = spark.createDataFrame([(0,)], "node LONG")
+    corpus = spark.createDataFrame(
+        [(i, [float((i * j) % 7 + 1) for j in range(4)]) for i in range(12)],
+        "vec_id LONG, embedding ARRAY<FLOAT>",
+    )
+
+    def run_all():
+        connected_components(edges, "src", "dst").collect()
+        pagerank(edges, iterations=2).collect()
+        hits(edges, iterations=2).collect()
+        bfs_depths(edges, seeds, rounds=2).collect()
+        label_propagation(edges, rounds=2).collect()
+        nn_descent_trajectory(corpus, dim=4, k=2, rounds=1)[-1].collect()
+
+    assert sc.getCheckpointDir() is None
+    run_all()
+    assert sc.getCheckpointDir() is None
+    request.getfixturevalue("session_checkpoint_dir")
+    before = sc.getCheckpointDir()
+    assert before is not None
+    run_all()
+    assert sc.getCheckpointDir() == before
 
 
 def test_robots_wildcard_precedence(spark):

@@ -38,3 +38,16 @@ def test_python_workers_import_the_package_from_any_cwd(tmp_path, sf_small):
     assert proc.returncode == 0, proc.stderr[-3000:]
     rows = [ln for ln in proc.stdout.splitlines() if ln.startswith("ROWS ")]
     assert rows and int(rows[0].split()[1]) > 0, proc.stdout[-2000:]
+
+
+def test_default_driver_memory_is_half_the_host():
+    """The default driver heap is half of MemTotal in whole GiB, with a
+    1g floor, so a session never asks for more heap than its host has.
+    Computed from meminfo text: no session is started."""
+    from bigdata_capstone_spark.session import default_driver_memory
+
+    meminfo = "MemTotal:       16303780 kB\nMemFree:         1024 kB\n"
+    assert default_driver_memory(meminfo) == "7g"
+    assert default_driver_memory("MemTotal: 134217728 kB\n") == "64g"
+    assert default_driver_memory("MemTotal: 1048576 kB\n") == "1g"
+    assert default_driver_memory("MemTotal: 524288 kB\n") == "1g"
