@@ -538,13 +538,16 @@ def segment_popularity_eval(
             "CAST(sum(CAST(qty AS DECIMAL(18,2))) AS DOUBLE) / count(1) AS mq"
         ),
     )
+    # a customer has labels iff some line's qty exceeds the mean; a
+    # size(labels) > 0 filter would be pushed below the projection as a
+    # second copy of the whole labels expression
     state = (
-        cust.selectExpr(
+        cust.filter("exists(lines, l -> l.qty > mq)")
+        .selectExpr(
             "seg",
             "array_distinct(transform(filter(lines, l -> l.qty > mq),"
             " l -> l.part)) AS labels",
         )
-        .filter("size(labels) > 0")
         .join(F.broadcast(pos_of), on="seg")
         .selectExpr(
             "array_sort(filter(transform(labels, p -> element_at(pos_of, p)),"

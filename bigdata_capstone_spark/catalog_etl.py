@@ -5274,7 +5274,7 @@ def unigram_viterbi_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_utc(spark)
     docs = load_table(spark, sf_dir, "documents")
-    vocab = unigram_piece_vocab(docs, max_piece_len=4, top_k=50).cache()
+    vocab = unigram_piece_vocab(docs, max_piece_len=4, top_k=50)
     words = word_frequencies(docs).select("word")
     return viterbi_segment_words(
         words, vocab, max_piece_len=4, max_word_len=8

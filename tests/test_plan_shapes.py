@@ -3,6 +3,9 @@ pinned): pushdown, pruning, broadcasts, and JVM-only hot paths are
 properties the 100 TB posture depends on — a silent plan regression (a
 lost broadcast, a widened scan, a Python eval sneaking into a hot path)
 should fail the suite, not wait for a bench diff.
+
+The registry-wide window audits run on every entry's own build in
+tests/test_catalog_oracle.py; the tests here pin single-entry shapes.
 """
 
 from __future__ import annotations
@@ -185,106 +188,6 @@ def test_bucketed_join_no_exchange(spark):
     ]
     assert exchanges == [], plan[:3000]
     assert "SortMergeJoin" in plan, plan[:2000]
-
-
-@pytest.mark.slow  # builds all 310 registry plans (~5 min)
-def test_no_unpartitioned_window_anywhere(spark):
-    """NO catalog query may plan a WindowExec without a partition spec —
-    an unpartitioned window is a single-partition sort of its whole input
-    (the `WARN WindowExec: No Partition Defined` anti-pattern), the one
-    plan shape that cannot survive a 100× scale-up. Global running sums
-    must go through relational.partitioned_prefix_sum; global ranks
-    through TakeOrdered pre-selection + partitioned_row_number.
-
-    Detection: in `windowspecdefinition(part..., sort ASC/DESC, frame)`
-    the partition columns precede the sort specs — if the FIRST argument
-    is itself a sort spec (token immediately followed by ASC/DESC), the
-    partition list is empty.
-    """
-    import re
-
-    sf = "/root/testdata/sf0.001"
-    bad = {}
-    for name, fn in sorted(QUERIES.items()):
-        df = fn(spark, sf)
-        qe = df._jdf.queryExecution()
-        plan = qe.optimizedPlan().toString()
-        hits = re.findall(
-            r"windowspecdefinition\((\S+) (?:ASC|DESC) NULLS", plan
-        )
-        if hits:
-            bad[name] = hits
-    assert not bad, f"unpartitioned windows in: {bad}"
-
-
-@pytest.mark.slow  # builds all 310 registry plans (~5 min)
-def test_no_low_cardinality_window_funnel(spark):
-    """Generalization of the unpartitioned-window gate (r8 verdict
-    Wrong #1): a window PARTITIONED by a handful-of-values column over
-    a corpus-sized input is the same single-task pathology the
-    unpartitioned gate exists to prevent — each stratum's entire row
-    set funnels through ONE task's sort. Any window whose partition
-    keys are all drawn from the fixture's low-cardinality columns must
-    have a row-bounding construct below it: an Aggregate (contingency /
-    state build), a LocalRelation (a collected broadcast cutoff frame —
-    the stratified_sample recipe), or a Limit. A raw scan+project under
-    such a window fails the gate.
-
-    Heuristic, stated honestly: the gate catches the raw-scan funnel
-    class; it cannot prove the bounding filter is selective."""
-    import re
-
-    LOW_CARD = {
-        "lang", "event_type", "source", "o_orderstatus",
-        "o_orderpriority", "l_returnflag", "l_linestatus", "r_name",
-        "n_name", "mime",
-    }
-    BOUNDING = (
-        "Aggregate",
-        "LocalRelation",  # collected literal frame (broadcast cutoff)
-        "LogicalRDD",     # createDataFrame'd literal frame, same role
-        "GlobalLimit",
-        "LocalLimit",
-        "__subrank",      # two-phase grouped top-k survivor filter
-        "__cutoff",       # broadcast hash-cutoff filter (stratified pick)
-    )
-    # Windows over persisted STATE SNAPSHOTS: the input parquet is
-    # bounded by the sketch/state contract (<= |groups| x capacity
-    # rows), which the gate cannot see from the plan. Each entry's
-    # boundedness is itself tested (state-size invariants in
-    # tests/test_sketches.py / test_streaming.py).
-    BOUNDED_SNAPSHOT = {
-        "streaming_value_quantiles",
-    }
-    sf = "/root/testdata/sf0.001"
-
-    def walk(node):
-        yield node
-        cs = node.children()
-        for i in range(cs.size()):
-            yield from walk(cs.apply(i))
-
-    bad = {}
-    for name, fn in sorted(QUERIES.items()):
-        if name in BOUNDED_SNAPSHOT:
-            continue
-        df = fn(spark, sf)
-        plan = df._jdf.queryExecution().optimizedPlan()
-        for node in walk(plan):
-            if node.nodeName() != "Window":
-                continue
-            ps = node.partitionSpec()
-            names = set()
-            for i in range(ps.size()):
-                s = ps.apply(i).toString()
-                m = re.match(r"(\w+)#\d+", s)
-                names.add(m.group(1) if m else s)
-            if not names or not names <= LOW_CARD:
-                continue
-            child = node.children().apply(0).toString()
-            if not any(tok in child for tok in BOUNDING):
-                bad.setdefault(name, []).append(sorted(names))
-    assert not bad, f"low-cardinality window funnels in: {bad}"
 
 
 def test_stratified_sample_pick_is_cutoff_filtered(spark):

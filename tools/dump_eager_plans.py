@@ -10,7 +10,8 @@ executed during the BUILD phase are invisible. This tool wraps
 plan is captured (in build order, before it executes), then appends the
 final frame's plan. The dump is therefore the COMPLETE set of physical
 plans the query runs, in execution order — the before/after evidence
-the optimization rounds commit for eager queries (plans/r11/).
+the optimization rounds committed for eager queries (the `plans/`
+tree, in git history at commit f88f165).
 """
 
 from __future__ import annotations
