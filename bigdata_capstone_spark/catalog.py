@@ -5446,9 +5446,10 @@ def embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty-cell coalesce, and the final scored assignment).
 
     Scale shape (operators/simsearch.py:kmeans_lloyd): per round one
-    broadcast cross-join map pass (corpus x k) + per-id top-1 hash agg,
-    and one map-side-combined hash agg whose output is k rows; the
-    centroid frame broadcasts everywhere, the corpus never re-shuffles.
+    map pass of the corpus against a single broadcast row of the k
+    centers (argmax cosine over an array of k similarities), and one
+    map-side-combined hash agg whose output is k rows; the centroid
+    frame broadcasts everywhere, the corpus never re-shuffles.
     Cross-row float sums are DECIMAL(28,14)-accumulated so Spark's
     partial aggregation and DuckDB's serial scan agree exactly."""
     from bigdata_capstone_spark.operators.simsearch import (

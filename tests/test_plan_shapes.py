@@ -113,29 +113,58 @@ def test_merge_upsert_broadcasts_changeset(spark):
     )
 
 
+def _plan_nodes(plan) -> list:
+    """Every node of a logical or (initial, pre-AQE) physical plan."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.initialPlan()
+        nodes.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
 def test_pq_encode_no_window_sort(spark):
-    """The PQ per-(vector, subspace) argmin must plan as a hash aggregate
-    (min_by with map-side partials), not a window sort over the
-    corpus x k_codes explosion; the codebook side must broadcast."""
+    """The nearest-anchor kernels (PQ codes, IVF cells, the IVF-PQ
+    encode) read each vector once against ONE broadcast anchor row: the
+    optimized plan holds no Window and no Aggregate (no corpus x k
+    argmin), the physical plan no SortMergeJoin (no id join), and its
+    only exchanges are fan_out's RoundRobin repartition and the single
+    anchor BroadcastExchange."""
     from pyspark.sql import functions as F
 
-    from bigdata_capstone_spark.operators.simsearch import pq_codes_prf
+    from bigdata_capstone_spark.operators.simsearch import (
+        assign_cells,
+        ivfpq_encode_prf,
+        pq_codes_prf,
+        prf_medoids,
+    )
     from bigdata_capstone_spark.sources.tables import load_table
 
     emb = load_table(spark, SF, "embeddings")
-    codes = pq_codes_prf(emb, dim=64, m=16, k_codes=32)
-    qe = codes._jdf.queryExecution()
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-    plan = qe.explainString(mode.fromString("formatted"))
-    import re
-
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, (
-        plan[:2000]
-    )
-    assert "min_by" in plan, plan[:2000]
-    # the only Window is the 32-row codebook ranking; the corpus-side
-    # argmin must NOT add one
-    assert len(re.findall(r"\(\d+\) Window", plan)) <= 1, plan[:2000]
+    base = emb.filter(F.col("vec_id") < 400)
+    kernels = {
+        "pq_codes_prf": pq_codes_prf(emb, dim=64, m=16, k_codes=32),
+        "assign_cells": assign_cells(emb, prf_medoids(emb, 16)),
+        "ivfpq_encode_prf": ivfpq_encode_prf(
+            emb.filter(F.col("vec_id") >= 400), dim=64, m=16, k_codes=32,
+            n_centroids=16, train_on=base,
+        ),
+    }
+    for name, df in kernels.items():
+        qe = df._jdf.queryExecution()
+        logical = {n.nodeName() for n in _plan_nodes(qe.optimizedPlan())}
+        assert not logical & {"Window", "Aggregate"}, (name, logical)
+        physical = _plan_nodes(qe.executedPlan())
+        names = [n.nodeName() for n in physical]
+        assert "SortMergeJoin" not in names, (name, names)
+        assert names.count("BroadcastExchange") == 1, (name, names)
+        shuffles = [n.toString() for n in physical if n.nodeName() == "Exchange"]
+        assert all(
+            sh.startswith("Exchange RoundRobinPartitioning") for sh in shuffles
+        ), (name, shuffles)
 
 
 def test_bpe_vocab_collapse_before_pairs(spark):
