@@ -4,9 +4,13 @@ Prints ONE JSON line:
   {"metric": ..., "value": total_sec, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., "runs": n}
 
-Execution is measured end-to-end per query (plan + run) into the `noop`
-sink, so results are fully materialized without pandas/driver-collect cost
-and without letting Catalyst prune work a count() would skip.
+Execution is measured end-to-end per query (build + plan + run) into the
+`noop` sink by ``observability.profile``, so results are fully
+materialized without pandas/driver-collect cost and without letting
+Catalyst prune work a count() would skip. Its layers (build and exec
+seconds and jobs, exec stage sums) go to stderr per run and, as
+medians, to the ``BENCH_LOCAL_r{N}.json`` record — never to the stdout
+line, which keeps the keys above.
 
 Wall-clock on a shared box is noisy (3-6× swings between runs observed),
 so the whole suite is run ``$SPARK_GRAFT_BENCH_RUNS`` times (default 3)
@@ -34,17 +38,21 @@ recordings over driver tails at the same or newer round.
 
 from __future__ import annotations
 
+import functools
 import glob
 import json
 import os
 import re
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from bigdata_capstone_spark.catalog import QUERIES  # noqa: E402
+from bigdata_capstone_spark.observability import (  # noqa: E402
+    medians,
+    profile_runs,
+    warm_up,
+)
 from bigdata_capstone_spark.session import build_session  # noqa: E402
 
 # Representative of each operator family (SURVEY §2 / north star):
@@ -258,11 +266,7 @@ def main() -> int:
     sf = float(m.group(1)) if m else None
 
     spark = build_session(app_name="bench")
-    # JVM/codegen warm-up on an unrelated trivial job (not counted), plus
-    # one tiny parquet scan so the first measured query doesn't absorb
-    # one-time parquet/datasource initialization
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(f"{sf_dir}/region.parquet").collect()
+    warm_up(spark, sf_dir)
 
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     # untimed fixture setup (persisted-index stand-ins — see the policy
@@ -270,30 +274,19 @@ def main() -> int:
     fixture_runs = {
         name: setup(spark, sf_dir) for name, setup in BENCH_FIXTURES.items()
     }
-    spark.catalog.clearCache()
-    samples: dict[str, list[float]] = {name: [] for name in HEADLINE}
-    for run in range(n_runs):
-        for name in HEADLINE:
-            fr = fixture_runs.get(name)
-            t0 = time.perf_counter()
-            df = fr() if fr is not None else QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.perf_counter() - t0, 3)
-            samples[name].append(dt)
-            print(f"# run{run + 1} {name}: {dt}s", file=sys.stderr, flush=True)
-            # queries that cache shared subplans (dedup shingles, twins) would
-            # otherwise accumulate executor memory across the run and distort
-            # later measurements; measure each query cold-cache instead
-            spark.catalog.clearCache()
-            # nudge the ContextCleaner: with a large driver heap, GC (which
-            # drives shuffle/broadcast cleanup) can lag for minutes, and stale
-            # shuffle state from a heavy query distorts the next measurements
-            spark._jvm.System.gc()
-
-    times = {
-        name: round(statistics.median(vals), 3)
-        for name, vals in samples.items()
-    }
+    # each query is profiled cold-cache: queries that cache shared
+    # subplans (dedup shingles, twins) would otherwise accumulate
+    # executor memory across the run and distort later measurements
+    layers = medians(profile_runs(
+        spark,
+        {
+            name: fixture_runs.get(name)
+            or functools.partial(QUERIES[name], spark, sf_dir)
+            for name in HEADLINE
+        },
+        n_runs,
+    ))
+    times = {name: lay["wall_s"] for name, lay in layers.items()}
     total = round(sum(times.values()), 3)
     reg = _regressions_vs_prior(times, sf)
     # keep the stdout contract line COMPACT: the driver captures a
@@ -319,7 +312,7 @@ def main() -> int:
             "flagged": sorted(reg.get("flagged", {})),
         },
     }
-    _record_local(out, sf)
+    _record_local({**out, "layers": layers}, sf)
     print(json.dumps(out))
     return 0
 

@@ -3,17 +3,27 @@
     python -m bigdata_capstone_spark list
     python -m bigdata_capstone_spark run <query> [--sf-dir DIR] [--limit N]
     python -m bigdata_capstone_spark explain <query> [--sf-dir DIR]
+    python -m bigdata_capstone_spark profile q1,q2 [--runs N] [--sf-dir DIR]
     python -m bigdata_capstone_spark sql "SELECT ..." [--sf-dir DIR]
 
 Gives the catalog a usable face: run any registered query against a
-test-data directory, print its physical plan, or run ad-hoc SQL over the
-registered table views — the replacement for the reference's five
-edit-and-rerun driver scripts.
+test-data directory, print its physical plans, profile it, or run ad-hoc
+SQL over the registered table views — the replacement for the
+reference's five edit-and-rerun driver scripts.
+
+``explain`` prints the plan of every subtree checkpointed while the
+query is built, in build order, then the final plan. ``profile`` builds
+and executes each query ``--runs`` times (default 3) through
+:func:`observability.profile`: one line per run on stderr, then one
+JSON line on stdout with each query's per-layer medians and the raw
+samples.
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
+import json
 import sys
 
 
@@ -23,12 +33,14 @@ def main(argv: list[str] | None = None) -> int:
 
     sub.add_parser("list", help="list registered queries (* = DuckDB oracle)")
 
-    for name in ("run", "explain"):
+    for name in ("run", "explain", "profile"):
         p = sub.add_parser(name)
         p.add_argument("query")
         p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
         if name == "run":
             p.add_argument("--limit", type=int, default=20)
+        if name == "profile":
+            p.add_argument("--runs", type=int, default=3)
 
     p = sub.add_parser("sql", help="ad-hoc SQL over the registered views")
     p.add_argument("statement")
@@ -37,6 +49,7 @@ def main(argv: list[str] | None = None) -> int:
 
     args = ap.parse_args(argv)
 
+    from bigdata_capstone_spark import observability as obs
     from bigdata_capstone_spark.catalog import ORACLE_SQL, QUERIES, register_views
     from bigdata_capstone_spark.session import build_session
 
@@ -52,14 +65,32 @@ def main(argv: list[str] | None = None) -> int:
             register_views(spark, args.sf_dir)
             spark.sql(args.statement).show(args.limit, truncate=False)
             return 0
-        if args.query not in QUERIES:
-            print(f"unknown query {args.query!r}; see `list`", file=sys.stderr)
+        names = args.query.split(",") if args.cmd == "profile" else [args.query]
+        unknown = [n for n in names if n not in QUERIES]
+        if unknown:
+            print(f"unknown query {unknown[0]!r}; see `list`", file=sys.stderr)
             return 2
-        df = QUERIES[args.query](spark, args.sf_dir)
+        if args.cmd == "profile":
+            runs = max(1, args.runs)
+            obs.warm_up(spark, args.sf_dir)
+            samples = obs.profile_runs(
+                spark,
+                {n: functools.partial(QUERIES[n], spark, args.sf_dir) for n in names},
+                runs,
+            )
+            print(json.dumps({
+                "medians": obs.medians(samples), "samples": samples,
+                "sf_dir": args.sf_dir, "runs": runs,
+            }))
+            return 0
         if args.cmd == "explain":
-            df.explain("formatted")
-        else:
-            df.show(args.limit, truncate=False)
+            with obs.captured_checkpoints() as subtrees:
+                df = QUERIES[args.query](spark, args.sf_dir)
+            for i, (label, plan) in enumerate(subtrees, 1):
+                print(f"== {label} #{i} (build order) ==\n{plan}\n")
+            print(f"== final plan ==\n{obs.explain_string(df)}")
+            return 0
+        QUERIES[args.query](spark, args.sf_dir).show(args.limit, truncate=False)
         return 0
     finally:
         spark.stop()

@@ -103,7 +103,10 @@ def dot_product_col(a: Column, b: Column) -> Column:
 
 
 def cosine_similarity_col(a: Column, b: Column) -> Column:
-    """Cosine similarity of two ``array<float>`` columns (double math)."""
-    return dot_product_col(a, b) / (
-        F.sqrt(dot_product_col(a, a)) * F.sqrt(dot_product_col(b, b))
+    """Cosine similarity of two ``array<float>`` columns (double math).
+    A zero-norm side gives null, not a DIVIDE_BY_ZERO error under ANSI
+    mode (``try_divide`` evaluates each norm fold once)."""
+    return F.try_divide(
+        dot_product_col(a, b),
+        F.sqrt(dot_product_col(a, a)) * F.sqrt(dot_product_col(b, b)),
     )

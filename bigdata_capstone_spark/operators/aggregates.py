@@ -83,35 +83,6 @@ def pearson_by_group(
     )
 
 
-def sorted_list_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    order: str,
-    item: str,
-    *,
-    descending_order: bool = False,
-    k: int | None = None,
-    out_col: str = "items",
-) -> DataFrame:
-    """Deterministically ordered per-group item list (A6 + Q1 fix).
-
-    ``collect_list`` order after a shuffle is unspecified, which silently
-    corrupted the reference's ranked lists (popularity_model.py:46-48 computes
-    ranks then discards them). Here: collect ``struct(order, item)``, sort
-    the array, optionally truncate to k, project items.
-    """
-    ord_col = F.col(order)
-    if descending_order:
-        ord_col = -ord_col
-    collected = df.groupBy(*keys).agg(
-        F.sort_array(F.collect_list(F.struct(ord_col.alias("o"), F.col(item).alias("i")))).alias("_s")
-    )
-    arr = F.col("_s.i")
-    if k is not None:
-        arr = F.slice(arr, 1, k)
-    return collected.select(*keys, arr.alias(out_col))
-
-
 def approx_stats(
     df: DataFrame,
     keys: Sequence[str],

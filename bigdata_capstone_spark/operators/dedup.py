@@ -242,9 +242,12 @@ def minhash_near_dup_pairs(
     the corpus is known clean.
 
     The exploded shingle frame feeds three consumers (signatures, sizes,
-    the verify join's two sides) — it is cached (memory-and-disk, spills
-    at scale) so tokenize/shingle/hash runs ONCE, not per branch
-    (profiled at sf0.1: 398s uncached → ~20s cached).
+    the verify join's two sides) — it is materialized by a lazy
+    ``localCheckpoint`` (memory-and-disk, spills at scale) so
+    tokenize/shingle/hash runs ONCE, not per branch (profiled at sf0.1:
+    398s recomputed → ~20s materialized): its first computation stores
+    the blocks the other consumers read, and no cached relation is left
+    behind for the caller to release.
 
     Measured dead end (round 4, n=5 at sf0.1): semi-joining the shingle
     frame down to candidate doc ids before the verify join — the
@@ -255,7 +258,9 @@ def minhash_near_dup_pairs(
     b-side shingle shuffle is corpus-wide, and it overlaps other
     stages). Revisit only if profiling a REAL corpus shows the b-side
     shuffle dominating."""
-    sh = exploded_shingles(df, text_col, id_col, shingle_n).cache()
+    sh = exploded_shingles(df, text_col, id_col, shingle_n).localCheckpoint(
+        eager=False
+    )
     index = _index_from_shingles(sh, id_col, n_perm, bands)
     return near_dup_pairs_from_index(
         index, id_col, min_jaccard, max_bucket_size

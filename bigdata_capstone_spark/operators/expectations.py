@@ -22,13 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _report(name: str, violations: Column) -> Column:
-    return F.struct(
-        F.lit(name).alias("check_name"),
-        violations.cast("long").alias("n_violations"),
-    )
-
-
 def check_not_null(df: DataFrame, name: str, col: str) -> DataFrame:
     """Violations = rows where ``col`` IS NULL."""
     return df.agg(

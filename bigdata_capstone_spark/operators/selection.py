@@ -41,16 +41,6 @@ from bigdata_capstone_spark.operators.relational import fan_out
 from bigdata_capstone_spark.operators.textops import tokens_col
 
 
-def _doc_token_counts(docs: DataFrame, text_col: str) -> DataFrame:
-    """(doc_id, token, tc): one explode pass, map-side combined."""
-    return (
-        fan_out(docs)
-        .select("doc_id", F.explode(tokens_col(text_col)).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count(F.lit(1)).alias("tc"))
-    )
-
-
 def nb_source_margin(
     docs: DataFrame,
     curated_sources: Sequence[str] = ("src0", "src1"),

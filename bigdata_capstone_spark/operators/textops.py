@@ -6,8 +6,8 @@ the oracle:
 
 - :func:`tokens_col` / :func:`token_count` — whitespace + regex ("BPE-ish")
   token counting
-- :func:`quality_features` / :func:`quality_score` — length, punctuation /
-  stopword / distinct-token ratios → composite quality score
+- :func:`quality_score` — length, distinct-token, alphabetic and
+  stopword ratios → composite quality score
 - :func:`lang_id_heuristic` — stopword-dictionary n-gram-free language ID
 - :func:`minhash_fingerprint` — k-min md5 fingerprint (document identity
   robust to token order)
@@ -101,31 +101,6 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-document quality signals (all ratios in [0,1])."""
-    toks = tokens_col(text_col)
-    n_tok = F.size(toks)
-    distinct_ratio = F.size(F.array_distinct(toks)) / n_tok
-    stop = F.array([F.lit(w) for w in LANG_STOPWORDS["en"]])
-    stop_ratio = F.size(F.array_intersect(F.array_distinct(toks), stop)) / F.lit(
-        float(len(LANG_STOPWORDS["en"]))
-    )
-    n_chars = F.length(text_col)
-    alpha_chars = F.length(F.regexp_replace(F.col(text_col), NON_LETTER_REGEX, ""))
-    alpha_ratio = alpha_chars / n_chars
-    mean_tok_len = (
-        F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)) / n_tok
-    )
-    return df.select(
-        "doc_id",
-        n_tok.cast("long").alias("n_tokens"),
-        F.round(distinct_ratio, 6).alias("distinct_ratio"),
-        F.round(stop_ratio, 6).alias("stopword_ratio"),
-        F.round(alpha_ratio, 6).alias("alpha_ratio"),
-        F.round(mean_tok_len, 6).alias("mean_token_len"),
-    )
-
-
 def quality_score_col(text_col: str = "text") -> Column:
     """The UNROUNDED composite quality expression (length / diversity /
     alphabetic / stopword terms) — exposed as a Column so composites
@@ -156,8 +131,8 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     heuristics), deliberately simple and fully portable.
 
     Terms are combined *unrounded* (rounding only the final score):
-    combining the display-rounded features of :func:`quality_features`
-    would drift the composite by ~1e-6 vs the oracle.
+    combining display-rounded terms would drift the composite by ~1e-6
+    vs the oracle.
     """
     return df.select(
         "doc_id", F.round(quality_score_col(text_col), 6).alias("quality")

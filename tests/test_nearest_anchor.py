@@ -14,6 +14,7 @@ import numpy as np
 import pytest
 
 from bigdata_capstone_spark.catalog import QUERIES
+from bigdata_capstone_spark.observability import profile
 from bigdata_capstone_spark.operators.simsearch import (
     assign_cells,
     ivfpq_encode_prf,
@@ -90,12 +91,12 @@ def test_duplicate_anchors_give_smallest_cell_and_code(spark, sf_small):
 
 def test_zero_and_nan_vectors_keep_cells_and_codes(spark, sf_small):
     """Edge rows keep the cells and codes of the per-pair window and
-    min_by forms. A zero vector divides by zero in every cosine: an
-    ANSI error by default, null cosines with ANSI off, which give the
-    smallest cell. A vector holding a NaN has all cosines NaN, which
-    rank above every number: again the smallest cell. Its distances are
-    NaN only in the NaN's subspace, where the smallest code wins; the
-    zero vector's distances are all finite."""
+    min_by forms, with ANSI mode on and off alike. A zero vector has a
+    zero norm: every cosine is null, which gives the smallest cell. A
+    vector holding a NaN has all cosines NaN, which rank above every
+    number: again the smallest cell. Its distances are NaN only in the
+    NaN's subspace, where the smallest code wins; the zero vector's
+    distances are all finite."""
     anchors = _anchor_vectors(spark, sf_small, 6)
     cells = spark.createDataFrame(
         list(enumerate(anchors)), "cell INT, center ARRAY<FLOAT>"
@@ -109,31 +110,32 @@ def test_zero_and_nan_vectors_keep_cells_and_codes(spark, sf_small):
         [(0, [0.0] * DIM), (1, nan_vec)],
         "vec_id BIGINT, embedding ARRAY<FLOAT>",
     )
-
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        assign_cells(corpus.filter("vec_id = 0"), cells).collect()
-
-    ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try:
-        assert dict(assign_cells(corpus, cells).collect()) == {0: 0, 1: 0}
-        scored = {
-            r["vec_id"]: r["cos_r"]
-            for r in kmeans_assign_scored(corpus, cells).collect()
-        }
-        assert scored[0] is None and np.isnan(scored[1])
-        got = {
-            (r["vec_id"], r["s"]): r["code"]
-            for r in pq_codes_prf(corpus, DIM, m=M, k_codes=6, codebook=book)
-            .collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", ansi)
     want = _codes(
         np.array([[0.0] * DIM, nan_vec]), np.array(anchors, dtype=np.float64)
     )
     assert want[1][5 // DSUB] == 0
-    assert got == {(i, s): int(want[i][s]) for i in (0, 1) for s in range(M)}
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for mode in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", mode)
+            assert dict(assign_cells(corpus, cells).collect()) == {0: 0, 1: 0}
+            scored = {
+                r["vec_id"]: r["cos_r"]
+                for r in kmeans_assign_scored(corpus, cells).collect()
+            }
+            assert scored[0] is None and np.isnan(scored[1]), mode
+            got = {
+                (r["vec_id"], r["s"]): r["code"]
+                for r in pq_codes_prf(
+                    corpus, DIM, m=M, k_codes=6, codebook=book
+                ).collect()
+            }
+            assert got == {
+                (i, s): int(want[i][s]) for i in (0, 1) for s in range(M)
+            }, mode
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_encode_matches_numpy_replay(spark, sf_small):
@@ -170,7 +172,7 @@ def test_ivfpq_incremental_build_runs_one_job(spark, sf_small):
     """Building embedding_ivfpq_incremental picks both anchor sets in ONE
     collect job (the ivf and pq picks are branches of one union); the
     plan ledger cannot see build-time jobs, so this guards them."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = dag.nextJobId()
-    QUERIES["embedding_ivfpq_incremental"](spark, sf_small)
-    assert dag.nextJobId() - j0 == 1
+    _, p = profile(
+        spark, lambda: QUERIES["embedding_ivfpq_incremental"](spark, sf_small)
+    )
+    assert p["build_jobs"] == 1

@@ -214,15 +214,6 @@ def test_kernel_edge_cases_match_window_reference(spark):
     assert got[3][1] == 1.0
 
 
-def _plan_guard_counts(spark, build):
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(dag.nextJobId())
-    df = build()
-    j1 = int(dag.nextJobId())
-    df.write.format("noop").mode("overwrite").save()
-    return df, j1 - j0, int(dag.nextJobId()) - j1
-
-
 @pytest.mark.parametrize(
     "name", ["ranking_metrics_popularity", "ranking_metrics_sweep"]
 )
@@ -234,11 +225,10 @@ def test_popularity_eval_plan_guard(spark, sf_small, name):
     import re
 
     from bigdata_capstone_spark.catalog import QUERIES
+    from bigdata_capstone_spark.observability import profile
 
-    spark.catalog.clearCache()
-    df, build_jobs, exec_jobs = _plan_guard_counts(
-        spark, lambda: QUERIES[name](spark, sf_small)
-    )
+    df, p = profile(spark, lambda: QUERIES[name](spark, sf_small))
+    build_jobs, exec_jobs = p["build_jobs"], p["exec_jobs"]
     assert build_jobs == 0, build_jobs
     assert exec_jobs <= 10, exec_jobs
     qe = df._jdf.queryExecution()

@@ -280,41 +280,6 @@ def test_wqsketch_level_closed_form_matches_duckdb_twin(spark):
     assert got[(1, None)] == got[(None, 1)] == got[(1, 0)] == got[(1, -5)] == 0
 
 
-def _build_jobs(spark, build):
-    """(frame, Spark jobs run while building it) by job-id delta."""
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    j0 = int(dag.nextJobId())
-    df = build()
-    return df, int(dag.nextJobId()) - j0
-
-
-def _input_records(spark, run) -> int:
-    """Input records of every stage that ``run()`` executes and that
-    was not skipped: parquet rows scanned plus rows re-read from
-    cached blocks."""
-    from py4j.protocol import Py4JJavaError
-
-    sc = spark.sparkContext._jsc.sc()
-    s0 = int(sc.dagScheduler().nextStageId())
-    run()
-    s1 = int(sc.dagScheduler().nextStageId())
-    sc.listenerBus().waitUntilEmpty()
-    no_q = spark.sparkContext._gateway.new_array(
-        spark.sparkContext._gateway.jvm.double, 0
-    )
-    read = 0
-    for sid in range(s0, s1):
-        try:
-            attempts = sc.statusStore().stageData(sid, False, None, False, no_q)
-        except Py4JJavaError:  # id of a stage that never ran
-            continue
-        for i in range(attempts.size()):
-            st = attempts.apply(i)
-            if st.status().toString() != "SKIPPED":
-                read += int(st.inputRecords())
-    return read
-
-
 def test_quantile_sketch_entries_build_without_barriers(
     spark, sf_small, sf_oracle
 ):
@@ -323,25 +288,26 @@ def test_quantile_sketch_entries_build_without_barriers(
     optimized plan holds a Window or a cached relation. Executed, each
     scans its source exactly once."""
     from bigdata_capstone_spark.catalog import QUERIES
+    from bigdata_capstone_spark.observability import profile
     from bigdata_capstone_spark.sources.tables import load_table
 
+    # profile clears the cache first: a table another test left cached
+    # would be read as cached batches, not as parquet rows
+    built = {}
     for name in ("orders_price_histogram", "quantile_sketch_shard_merge"):
-        df, jobs = _build_jobs(spark, lambda: QUERIES[name](spark, sf_small))
+        df, built[name] = profile(spark, lambda: QUERIES[name](spark, sf_small))
+        jobs = built[name]["build_jobs"]
         assert jobs == 0, (name, jobs)
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert "Window" not in plan, (name, plan[:3000])
         assert "InMemoryRelation" not in plan, (name, plan[:3000])
 
-    # a table another test left cached would be read as cached batches,
-    # not rows: count reads against the parquet files
-    spark.catalog.clearCache()
     orders = load_table(spark, sf_small, "orders")
     n_orders = orders.count()
     n_partial = sk.qsketch_partials_onepass(
         orders, F.col("o_orderkey"), F.col("o_totalprice"), 512
     ).count()
-    df = QUERIES["orders_price_histogram"](spark, sf_small)
-    read = _input_records(spark, lambda: df.collect())
+    read = built["orders_price_histogram"]["input_records"]
     # input records = one parquet scan + one re-read of the partials
     # from the blocks their first computation cached
     assert read == n_orders + n_partial, (read, n_orders, n_partial)
@@ -354,8 +320,10 @@ def test_quantile_sketch_entries_build_without_barriers(
         events, F.col("event_id") % 4, F.col("event_id"), F.col("value"), 512
     ).count()
     assert n_partial < n_events
-    df = QUERIES["quantile_sketch_shard_merge"](spark, sf_oracle)
-    read = _input_records(spark, lambda: df.collect())
+    _, p = profile(
+        spark, lambda: QUERIES["quantile_sketch_shard_merge"](spark, sf_oracle)
+    )
+    read = p["input_records"]
     # one events scan computes the partials; the other three shard
     # filters re-read their cached blocks, and the merge re-reads its
     # cached union (the four shards partition the partials)
