@@ -481,7 +481,7 @@ def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # the exploded token frame is cached (memory-and-disk, spills at
     # scale) so tokenize+explode runs once for the tf and df branches —
-    # same discipline as dedup's shingle cache
+    # same discipline as dedup's materialized shingle frame
     toks = fan_out(docs).select(
         "doc_id", F.explode(tokens_col("text")).alias("tok")
     ).cache()

@@ -73,10 +73,12 @@ def profile(
     Nothing is cleared afterwards, so a caller can check what the query
     left cached.
 
-    Jobs and stages are counted by id delta (the scheduler's next id
-    before and after), never by the length of a job list: the status
-    store keeps only ``spark.ui.retainedJobs`` entries, so a list length
-    stops growing once a long session passes that many jobs."""
+    Jobs are counted by id delta (the scheduler's next id before and
+    after), never by the length of a job list: the status store keeps
+    only ``spark.ui.retainedJobs`` entries, so a list length stops
+    growing once a long session passes that many jobs. The stage sums do
+    read the status store, so they hold only when ``stages_missing`` is
+    0 (see :func:`_stage_sums`)."""
     spark.catalog.clearCache()
     spark._jvm.System.gc()
     sc = spark.sparkContext._jsc.sc()
@@ -101,14 +103,16 @@ def _stage_sums(spark: SparkSession, stage_ids: range) -> dict[str, int]:
     from the status store (available with the UI off): tasks, input
     records (parquet rows scanned plus rows re-read from cached blocks),
     shuffle bytes and spill of the stages that ran; skipped stages are
-    only counted."""
+    only counted. ``stages_missing`` counts the ids the store no longer
+    holds — evicted past ``spark.ui.retainedStages`` or lost with a
+    dropped listener event — and the sums undercount when it is not 0."""
     sc = spark.sparkContext._jsc.sc()
     sc.listenerBus().waitUntilEmpty()
     gw = spark.sparkContext._gateway
     no_quantiles = gw.new_array(gw.jvm.double, 0)
     out = dict.fromkeys(
-        ("tasks", "stages_skipped", "input_records", "shuffle_read_bytes",
-         "shuffle_write_bytes", "spill_bytes"),
+        ("tasks", "stages_skipped", "stages_missing", "input_records",
+         "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes"),
         0,
     )
     for sid in stage_ids:
@@ -116,7 +120,8 @@ def _stage_sums(spark: SparkSession, stage_ids: range) -> dict[str, int]:
             attempts = sc.statusStore().stageData(
                 sid, False, None, False, no_quantiles
             )
-        except Py4JJavaError:  # id of a stage that never ran
+        except Py4JJavaError:
+            out["stages_missing"] += 1
             continue
         for i in range(attempts.size()):
             st = attempts.apply(i)

@@ -171,8 +171,11 @@ def test_encode_matches_numpy_replay(spark, sf_small):
 def test_ivfpq_incremental_build_runs_one_job(spark, sf_small):
     """Building embedding_ivfpq_incremental picks both anchor sets in ONE
     collect job (the ivf and pq picks are branches of one union); the
-    plan ledger cannot see build-time jobs, so this guards them."""
+    plan ledger cannot see build-time jobs, so this guards them. The
+    entry is a known cache leak: its caches are released after the
+    profile, so later tests share the session without them."""
     _, p = profile(
         spark, lambda: QUERIES["embedding_ivfpq_incremental"](spark, sf_small)
     )
+    spark.catalog.clearCache()
     assert p["build_jobs"] == 1

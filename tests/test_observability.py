@@ -17,24 +17,28 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_captured_checkpoints_label_both_truncate_paths(spark, request):
-    """ckpt.truncate is captured on its local and its reliable path, a
-    lazy localCheckpoint is labelled lazy, each entry holds the plan of
-    the checkpointed subtree, and the patch is undone on exit."""
+    """ckpt.truncate and ckpt.materialize are captured on their local
+    and their reliable paths, materialize's lazy checkpoints are
+    labelled lazy, each entry holds the plan of the checkpointed
+    subtree, and the patch is undone on exit."""
     df = spark.range(10).filter("id > 2")
     with captured_checkpoints() as local:
         ckpt.truncate(df)
-        df.localCheckpoint(eager=False)
+        ckpt.materialize(df)
     request.getfixturevalue("session_checkpoint_dir")
     with captured_checkpoints() as reliable:
         ckpt.truncate(df)
+        ckpt.materialize(df)
     assert [label for label, _ in local] == [
         "eager localCheckpoint", "lazy localCheckpoint"
     ]
-    assert [label for label, _ in reliable] == ["eager checkpoint"]
+    assert [label for label, _ in reliable] == [
+        "eager checkpoint", "lazy checkpoint"
+    ]
     assert all("Filter" in plan for _, plan in local + reliable)
 
     ckpt.truncate(df)
-    assert len(reliable) == 1
+    assert len(reliable) == 2
 
 
 def test_profile_subcommand_prints_layers(sf_small):
@@ -58,5 +62,6 @@ def test_profile_subcommand_prints_layers(sf_small):
     out = json.loads(proc.stdout.strip().splitlines()[-1])
     layers = out["medians"]["pricing_summary"]
     assert layers["build_jobs"] == 0 and layers["exec_jobs"] >= 1, layers
+    assert layers["stages_missing"] == 0, layers
     assert layers["tasks"] >= layers["exec_jobs"], layers
     assert len(out["samples"]["pricing_summary"]) == out["runs"] == 1

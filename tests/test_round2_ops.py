@@ -229,6 +229,30 @@ def test_bucket_cap_threads_through_production_entry_points(spark):
     assert tiny < uncapped  # cap=1 kills every multi-doc bucket
 
 
+def test_shingle_frame_follows_the_session_checkpoint_rule(spark, request):
+    """minhash_near_dup_pairs materializes its shingle frame through
+    ckpt.materialize: with a session checkpoint dir the frame is written
+    there (a lost executor recomputes instead of aborting), and the
+    pairs are those of the local path."""
+    from bigdata_capstone_spark.operators.dedup import minhash_near_dup_pairs
+    from bigdata_capstone_spark.sources.tables import load_table
+
+    docs = load_table(spark, SF, "documents")
+
+    def pairs():
+        return sorted(
+            tuple(r)
+            for r in minhash_near_dup_pairs(
+                docs, n_perm=8, bands=4, min_jaccard=0.35
+            ).collect()
+        )
+
+    local = pairs()
+    ckpt_dir = request.getfixturevalue("session_checkpoint_dir")
+    assert pairs() == local and local
+    assert any(p.name.startswith("part-") for p in ckpt_dir.rglob("*"))
+
+
 def test_cross_corpus_near_dups_find_planted_paraphrase(spark):
     """A reference doc and its one-word-changed paraphrase in the corpus
     must pair across sides; unrelated docs must not; same-side near-dups
